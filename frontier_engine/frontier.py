@@ -2,28 +2,35 @@
 
 Each round (north_rule pipeline):
 
-  pending candidates ──canonicalized at ingest──▶
-    1. URL-seen filter   bloom prefilter + exact left_anti (urlseen.py)
+  pending candidates ──canonicalized at ingest, admitted once──▶
+    1. membership        none at round start: pending is never re-filtered
     2. robots gate       broadcast join + rule kernel     (politeness.py)
     3. schedule          per-host PQ, budget-capped        (politeness.py)
     4. "fetch"           equi join against the pages table (keep-newest)
     5. process           extraction pipeline               (pipeline.py)
     6. discover          links → canonicalize → known-set bloom prefilter
                          + exact left_anti → new pending candidates
-    7. commit            IceLite snapshot: pending/shards replaced,
-                         settled-log/known/seen/schedule/meta/payload
-                         APPENDED, counters + per-partition lineage in the
-                         manifest (icelite.py)
+    7. commit            IceLite snapshot: pending/known-bloom replaced,
+                         settled-log/known/schedule/meta/payload APPENDED,
+                         counters + per-partition lineage in the manifest
+                         (icelite.py)
+
+Why step 1 is empty: frontier_known is the one URL-seen set. A URL enters
+pending only through step 6's anti join against it (or as a seed, which
+init also records there), and it leaves pending in the round that settles
+it. So pending never holds a URL that was scheduled before, and a second
+filter at round start could never remove a row (the ``dup`` counter stays
+0 for that reason).
 
 State layout (write volume ∝ round delta, never ∝ crawl size):
   frontier_pending  REPLACED  the working set (grows/shrinks with the crawl
                               wave — the only full rewrite, and it IS the
                               active state, not history)
-  frontier_log      APPEND    settled rows (fetched/missing/dup/blocked)
-                              from this round only
+  frontier_log      APPEND    settled rows (fetched/missing/blocked) from
+                              this round only
   frontier_known    APPEND    url_hash of every candidate ever admitted —
-                              the discovered-link dedup set (8 B/row)
-  seen              APPEND    scheduled (url_hash, url_norm) per round
+                              the URL-seen set (8 B/row)
+  known_shards      REPLACED  bloom shards over frontier_known (urlseen.py)
 A full historical frontier view is ``frontier_table()`` = pending ∪ log.
 
 Determinism: candidate identity is idx_id = index_uuid(round-millis,
@@ -33,10 +40,10 @@ schedules order by (priority DESC, idx_id ASC) per host. A killed job
 resumes from the last committed snapshot with an identical schedule
 (tests/test_frontier.py::test_resume_determinism).
 
-Scale: the only frontier-wide shuffles are the seen and known anti-joins
-(both bloom-pruned to their maybe-member survivors) and the per-host
-window/groupBy; the pages fetch join is an equi join on url_norm that AQE
-turns into a broadcast when the scheduled set is small.
+Scale: the only frontier-wide shuffles are the known-set anti join (bloom-
+pruned to its maybe-member survivors) and the per-host window/groupBy; the
+pages fetch join is an equi join on url_norm that AQE turns into a broadcast
+when the scheduled set is small.
 """
 
 from __future__ import annotations
@@ -64,8 +71,10 @@ FRONTIER_SCHEMA = T.StructType(
     ]
 )
 
-SEEN_SCHEMA = "url_hash long, url_norm string"
 PRIORITY_DECAY = 0.5
+# Known-set sizes up to this many rows take the broadcast anti join at link
+# discovery; larger sets take the sharded-bloom prefilter + exact anti join.
+_KNOWN_BROADCAST_ROWS = 1_000_000
 
 
 def candidates_from_urls(df: DataFrame, round_no: int, id_prefix: str,
@@ -169,16 +178,12 @@ class FrontierEngine:
 
     def init(self, seeds: DataFrame, robots: DataFrame) -> int:
         """Snapshot 0: seeded pending set + known hashes (+ their bloom
-        shards) + robots + empty seen/shards."""
+        shards) + robots."""
         frontier = candidates_from_urls(seeds, round_no=0, id_prefix=self.id_prefix).persist()
-        empty_seen = self.spark.createDataFrame([], SEEN_SCHEMA)
-        empty_shards = self.spark.createDataFrame([], urlseen.SHARD_SCHEMA)
         n = frontier.count()
         sid = self.store.commit(
             tables={
                 "frontier_pending": frontier,
-                "seen": empty_seen,
-                "urlseen_shards": empty_shards,
                 "known_shards": urlseen.build_shards(
                     frontier.select("url_hash"), self.n_shards, self.bloom_bits
                 ),
@@ -207,38 +212,16 @@ class FrontierEngine:
         n_pending_in = prev_counters["pending_out"]
         seen_total = prev_counters.get("seen_total", 0)
 
-        pending = self._read("frontier_pending")
+        # 1. membership: none needed here. A URL enters pending only through
+        # the anti join against frontier_known (step 6) and leaves it when it
+        # settles, so pending never holds a URL that was already scheduled.
+        pending = self._read("frontier_pending").persist()
         known = self._read("frontier_known")
         known_shards = self._read("known_shards")
-        seen = self._read("seen")
-        shards = self._read("urlseen_shards")
         robots = self._read("robots")
 
-        # 1. URL-seen: bloom prefilter + exact anti join. Two scale-adaptive
-        # short-circuits (r6), both decided from the free seen_total counter:
-        # - seen empty (first round on a store): the whole machinery is a
-        #   provable no-op; return pending unchanged, dup empty.
-        # - seen SMALL (fits a broadcast — ~16 B/hash, gate at 1M rows ≈
-        #   16 MB): a broadcast hash anti join of pending against the seen
-        #   keys is strictly cheaper than bloom-marking (shard exchange +
-        #   python stage) followed by the same exact anti — the bloom
-        #   exists to prune a SHUFFLE the broadcast regime never pays.
-        #   dup is the complementary semi join (pending ∩ seen keys ≡
-        #   pending minus unseen). Production crawls exceed the gate within
-        #   a few rounds and take the sharded-bloom path unchanged.
-        if seen_total == 0:
-            unseen = pending.persist()
-            dup = spark.createDataFrame([], pending.schema)
-        elif seen_total <= 1_000_000:
-            seen_keys = F.broadcast(seen.select("url_hash"))
-            unseen = pending.join(seen_keys, "url_hash", "left_anti").persist()
-            dup = pending.join(seen_keys, "url_hash", "left_semi")
-        else:
-            unseen = urlseen.filter_unseen(pending, shards, seen, self.n_shards).persist()
-            dup = pending.join(unseen.select("url_hash"), "url_hash", "left_anti")
-
         # 2. robots gate
-        gated = politeness.apply_robots_gate(unseen, robots)
+        gated = politeness.apply_robots_gate(pending, robots)
         allowed = gated.where(F.col("robots_allowed"))
         blocked = gated.where(~F.col("robots_allowed"))
 
@@ -300,8 +283,6 @@ class FrontierEngine:
             # anyway — the staged count materializes the same cache the
             # fused action would have built, splitting the lazy chain at
             # its shuffle barriers.
-            unseen.count()
-            _t = _mark("p_seen_bloom", _t)
             sched_all.count()
             _t = _mark("p_robots_schedule", _t)
 
@@ -329,7 +310,7 @@ class FrontierEngine:
         # the docs branch) both read proc, and concurrent branches of one
         # job would otherwise compute the heavy UDF twice in parallel.
         proc.count()
-        _t = _mark("seen_schedule_fetch_extract", _t)
+        _t = _mark("schedule_fetch_extract", _t)
         missing = scheduled.select("url_norm", "url_hash", "host", "priority", "idx_id").join(
             proc.select("url_norm"), "url_norm", "left_anti"
         )
@@ -417,30 +398,25 @@ class FrontierEngine:
         settled_delta = (
             mark(proc, "fetched")
             .unionByName(mark(missing, "missing"))
-            .unionByName(mark(dup, "dup"))
             .unionByName(mark(blocked, "skipped_robots"))
         ).persist()
         # not scheduled this round → stays pending (budget carry-over);
-        # one anti join against the union of settled keys, not three
-        settled_keys = (
-            scheduled.select("url_hash")
-            .unionByName(dup.select("url_hash"))
-            .unionByName(blocked.select("url_hash"))
-        )
+        # one anti join against the union of settled keys
+        settled_keys = scheduled.select("url_hash").unionByName(blocked.select("url_hash"))
         leftover = pending.join(settled_keys, "url_hash", "left_anti").select(
             [f.name for f in FRONTIER_SCHEMA.fields]
         )
         # anti vs known only: every url_hash ever admitted (pending at any
-        # point) is in frontier_known — 8 B/row. Bloom-PREFILTERED like the
-        # seen path (same shard machinery, same exactness: the bloom prunes
-        # the definitely-unknown majority, only maybe-known rows reach the
-        # exact left_anti). Without this, the append-only known table —
-        # ~80 GB of hashes at 10^10 URLs — shuffles in full every round;
+        # point) is in frontier_known — 8 B/row. Bloom-PREFILTERED (the
+        # bloom prunes the definitely-unknown majority, only maybe-known rows
+        # reach the exact left_anti). Without this, the append-only known
+        # table — ~80 GB of hashes at 10^10 URLs — shuffles in full every round;
         # with it the exact join input is ≈ |discovered ∩ known| + FPR·rest.
-        # r6: while the known set is still broadcast-sized (same rationale
-        # and gate as the seen path above; known_total is the exact append
-        # count summed from snapshot counters — no job), a broadcast hash
-        # anti join beats the bloom mark + exact anti outright.
+        # r6: while the known set is still broadcast-sized (~16 B/hash;
+        # known_total is the exact append count summed from snapshot
+        # counters — no job), a broadcast hash anti join beats the bloom
+        # mark + exact anti outright: the bloom exists to prune a SHUFFLE
+        # the broadcast regime never pays.
         # known_shards is None only for stores created before this table
         # existed — fall back to the plain exact anti join there.
         known_total = sum(
@@ -448,7 +424,7 @@ class FrontierEngine:
             + s.get("counters", {}).get("discovered_new", 0)
             for s in self.store.snapshots()
         )
-        if known_total <= 1_000_000:
+        if known_total <= _KNOWN_BROADCAST_ROWS:
             new_pending = discovered.join(
                 F.broadcast(known.select("url_hash")), "url_hash", "left_anti"
             )
@@ -459,27 +435,14 @@ class FrontierEngine:
         else:
             new_pending = discovered.join(known.select("url_hash"), "url_hash", "left_anti")
         pending_new = leftover.unionByName(new_pending).persist()
-        # seen is APPEND-ONLY: per-round scheduled sets are disjoint by
-        # construction (this round's candidates were seen-filtered), so no
-        # distinct/rewrite of the accumulated set is ever needed — O(round)
-        # IO instead of O(crawl) per round (Iceberg append semantics).
-        # FUSED build+merge (extend_shards): one shuffle + one pandas stage
-        # instead of build → bitmap-shuffle → merge. Stage depth is a fixed
-        # per-round commit latency that grows with executor count (measured
-        # 28 s vs 4.7 s for the known-set chain at 16 vs 4 one-core
-        # executors); the fused op is bit-identical (property-tested).
-        new_shards = urlseen.extend_shards(
-            shards if seen_total > 0 else None,
-            scheduled.select("url_hash"),
-            self.n_shards,
-            self.bloom_bits,
-        )
         # known-set bloom kept in lockstep: this round's newly-admitted
         # hashes (round == round_no+1 rows of the pending cache — the same
         # cache-read trick as the frontier_known delta below) OR-merge into
         # known_shards, so next round's discovered-link prefilter covers
         # every admitted URL. Exactness is unaffected by bloom saturation
-        # (false positives only add rows to the exact join).
+        # (false positives only add rows to the exact join). FUSED
+        # build+merge (extend_shards): one shuffle + one pandas stage instead
+        # of build → bitmap-shuffle → merge (bit-identical, property-tested).
         if known_shards is not None:
             new_known_shards = urlseen.extend_shards(
                 known_shards,
@@ -491,85 +454,84 @@ class FrontierEngine:
             new_known_shards = None
 
         # Overlap independent writes with the counters job (guide §2.6):
-        # meta/payload are pure projections of the proc cache, the seen-
-        # bloom extend reads only the sched_all cache + parent shards —
-        # all materialized by the proc job above and UNTOUCHED by the
-        # counters job below, so their commit writes can run on driver
-        # threads while the counters job computes. Their _sized targets
-        # never depended on the exact counters (meta/payload size off the
-        # parent-snapshot pending_out bound), so the written files are
-        # byte-identical to the old in-commit writes; the commit manifests
-        # the prewritten paths exactly as its own. A failure surfaces at
-        # fut.result() and aborts before the commit point (orphans inert).
+        # meta/payload are pure projections of the proc cache — materialized
+        # by the proc job above and UNTOUCHED by the counters job below, so
+        # their commit writes can run on driver threads while the counters
+        # job computes. Their _sized targets never depended on the exact
+        # counters (they size off the parent-snapshot pending_out bound), so
+        # the written files are byte-identical to in-commit writes; the
+        # commit manifests the prewritten paths exactly as its own. A failure
+        # surfaces at fut.result() and aborts before the commit point
+        # (orphans inert); leaving the block waits for every other future,
+        # so no write or aggregation outlives a failed round.
         from concurrent.futures import ThreadPoolExecutor
 
         next_sid = self.store.next_snapshot_id()
-        early_pool = ThreadPoolExecutor(max_workers=7)
-        early_specs = [
-            ("meta_docs", meta, True),
-            ("payload_docs", payload, True),
-            ("urlseen_shards", new_shards, False),
-        ]
-        early_futs = {
-            name: (early_pool.submit(self.store.write_table, name, df, next_sid), is_append)
-            for name, df, is_append in early_specs
-        }
+        with ThreadPoolExecutor(max_workers=6) as early_pool:
+            early_futs = {
+                name: early_pool.submit(self.store.write_table, name, df, next_sid)
+                for name, df in (("meta_docs", meta), ("payload_docs", payload))
+            }
 
-        if os.environ.get("FRONTIER_PROFILE"):
-            # split the counters job's inputs (opt-in, distorts the fused
-            # numbers): settled materialization vs the link-discovery UDF
-            # chain behind pending_new, measured sequentially
-            settled_delta.count()
-            _t = _mark("p_settled_materialize", _t)
-            pending_new.count()
-            _t = _mark("p_pending_links_udf", _t)
-        # ALL round metrics via four CONCURRENT per-frame aggregations in
-        # the same pool as the early writes (guide §2.6) — the Metrics.counter
-        # analog, process.py:120. The settled/pending aggs double as the
-        # materialization of those caches (a groupBy over an unmaterialized
-        # persisted frame computes and caches every partition, exactly like
-        # the count() it replaces); the scheduled/proc aggs read caches the
-        # fused job above already materialized. The r5 design fused
-        # everything into ONE tagged-union job to pay driver-action latency
-        # once — but that job was SERIAL after the materialization counts;
-        # running the four small aggs concurrently folds the whole counters
-        # wall into the materialization window. Keys never collide across
-        # the two status frames (settled statuses ≠ 'pending').
-        s_fut = early_pool.submit(
-            lambda: settled_delta.groupBy("status", "round").agg(F.count(F.lit(1)).alias("n")).collect()
-        )
-        p_fut = early_pool.submit(
-            lambda: pending_new.groupBy("status", "round").agg(F.count(F.lit(1)).alias("n")).collect()
-        )
-        shard_fut = early_pool.submit(
-            lambda: scheduled.groupBy(
-                urlseen.shard_of(F.col("url_hash"), self.n_shards).alias("shard_id")
-            ).agg(F.count(F.lit(1)).alias("n")).collect()
-        )
-        docs_fut = early_pool.submit(
-            lambda: proc.groupBy(F.col("doc.skip_reason").alias("reason"))
-            .agg(F.count(F.lit(1)).alias("n")).collect()
-        )
-        status_counts = {
-            (r["status"], int(r["round"])): r["n"] for r in s_fut.result() + p_fut.result()
-        }
-        n_docs_ok = sum(r["n"] for r in docs_fut.result() if r["reason"] == "")
-        lineage = sorted(
-            ({"shard_id": int(r["shard_id"]), "scheduled": r["n"]} for r in shard_fut.result()),
-            key=lambda d: d["shard_id"],
-        )
-        _t = _mark("counters_lineage_job", _t)
+            if os.environ.get("FRONTIER_PROFILE"):
+                # split the counters job's inputs (opt-in, distorts the fused
+                # numbers): settled materialization vs the link-discovery UDF
+                # chain behind pending_new, measured sequentially
+                settled_delta.count()
+                _t = _mark("p_settled_materialize", _t)
+                pending_new.count()
+                _t = _mark("p_pending_links_udf", _t)
+            # ALL round metrics via four CONCURRENT per-frame aggregations in
+            # the same pool as the early writes (guide §2.6) — the
+            # Metrics.counter analog, process.py:120. The settled/pending aggs
+            # double as the materialization of those caches (a groupBy over
+            # an unmaterialized persisted frame computes and caches every
+            # partition, exactly like the count() it replaces); the
+            # scheduled/proc aggs read caches the fused job above already
+            # materialized. Running the four small aggs concurrently folds
+            # the whole counters wall into the materialization window. Keys
+            # never collide across the two status frames (settled statuses ≠
+            # 'pending').
+            s_fut = early_pool.submit(
+                lambda: settled_delta.groupBy("status", "round").agg(F.count(F.lit(1)).alias("n")).collect()
+            )
+            p_fut = early_pool.submit(
+                lambda: pending_new.groupBy("status", "round").agg(F.count(F.lit(1)).alias("n")).collect()
+            )
+            shard_fut = early_pool.submit(
+                lambda: scheduled.groupBy(
+                    urlseen.shard_of(F.col("url_hash"), self.n_shards).alias("shard_id")
+                ).agg(F.count(F.lit(1)).alias("n")).collect()
+            )
+            docs_fut = early_pool.submit(
+                lambda: proc.groupBy(F.col("doc.skip_reason").alias("reason"))
+                .agg(F.count(F.lit(1)).alias("n")).collect()
+            )
+            status_counts = {
+                (r["status"], int(r["round"])): r["n"] for r in s_fut.result() + p_fut.result()
+            }
+            n_docs_ok = sum(r["n"] for r in docs_fut.result() if r["reason"] == "")
+            lineage = sorted(
+                ({"shard_id": int(r["shard_id"]), "scheduled": r["n"]} for r in shard_fut.result()),
+                key=lambda d: d["shard_id"],
+            )
+            _t = _mark("counters_lineage_job", _t)
+            # join the overlapped writes before the commit point; a failed
+            # early write raises here and aborts
+            prewritten = {name: (fut.result(), True) for name, fut in early_futs.items()}
+
         n_fetched = status_counts.get(("fetched", round_no), 0)
         n_missing = status_counts.get(("missing", round_no), 0)
-        n_dup = status_counts.get(("dup", round_no), 0)
         n_blocked = status_counts.get(("skipped_robots", round_no), 0)
         n_scheduled = n_fetched + n_missing
         counters = {
             "round": round_no,
             "pending_in": n_pending_in,
-            "dup": n_dup,
+            # pending never holds an already-scheduled URL (step 1), so no
+            # candidate settles as a duplicate; kept for the counter schema
+            "dup": 0,
             "skipped_robots": n_blocked,
-            "skipped_budget": n_pending_in - n_dup - n_blocked - n_scheduled,
+            "skipped_budget": n_pending_in - n_blocked - n_scheduled,
             "scheduled": n_scheduled,
             "fetched": n_fetched,
             "missing": n_missing,
@@ -580,11 +542,11 @@ class FrontierEngine:
         counters["seen_total"] = seen_total + n_scheduled
         # Delta sizing uses the EXACT per-frame counts the fused counters
         # job just computed — not the n_pending_in upper bound, which for
-        # the budget-bounded frames (seen/schedule: ≤ budget × hosts;
-        # known delta: discovered_new) is orders of magnitude too high and
+        # the budget-bounded frames (schedule: ≤ budget × hosts; known
+        # delta: discovered_new) is orders of magnitude too high and
         # saturated the coalesce target at n_part, emitting n_part
         # near-empty files per round.
-        n_settled = n_scheduled + n_dup + n_blocked
+        n_settled = n_scheduled + n_blocked
         tables = {
             # sized views over the ALREADY-MATERIALIZED caches (the
             # counters job ran first): coalesce here merges cached
@@ -594,13 +556,6 @@ class FrontierEngine:
         }
         if new_known_shards is not None:
             tables["known_shards"] = new_known_shards
-        # join the overlapped writes (meta/payload/urlseen_shards) before
-        # the commit point; a failed early write raises here and aborts
-        prewritten = {
-            name: (fut.result(), is_append)
-            for name, (fut, is_append) in early_futs.items()
-        }
-        early_pool.shutdown()
         self.store.commit(
             tables=tables,
             append_tables={
@@ -614,7 +569,6 @@ class FrontierEngine:
                     pending_new.where(F.col("round") == round_no + 1).select("url_hash"),
                     counters["discovered_new"],
                 ),
-                "seen": _sized(scheduled.select("url_hash", "url_norm"), n_scheduled),
                 "schedule": _sized(
                     scheduled.select(
                         F.lit(round_no).cast("int").alias("round"),
@@ -638,7 +592,7 @@ class FrontierEngine:
                     phases["p_write_secs"] = ws
             print(f"[frontier-timing] round {round_no}: {phases}", flush=True)
             counters["phases"] = phases  # machine-readable (scaling harness)
-        for df in (unseen, sched_all, proc, settled_delta, pending_new):
+        for df in (pending, sched_all, proc, settled_delta, pending_new):
             df.unpersist()
         return counters
 

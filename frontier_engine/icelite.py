@@ -66,6 +66,7 @@ class IceLite:
         reads only — no data scan."""
         self.root = root
         self.stats_columns = stats_columns or {}
+        self.prewrite_secs: dict[str, float] = {}
         os.makedirs(os.path.join(root, "metadata"), exist_ok=True)
         os.makedirs(os.path.join(root, "data"), exist_ok=True)
 
@@ -184,7 +185,6 @@ class IceLite:
         (from ``next_snapshot_id``); pass the returned path to ``commit``'s
         ``prewritten``. The write happens NOW, on the caller's thread."""
         path = os.path.join(self.root, "data", name, f"snap-{snap_id}")
-        self.prewrite_secs = getattr(self, "prewrite_secs", {})
         self.prewrite_secs[name] = self._write_dataset(df, path)
         return path
 
@@ -218,9 +218,10 @@ class IceLite:
         snap_id = 0 if parent is None else parent + 1
         for name, (path, _a) in (prewritten or {}).items():
             # single-writer contract: prewrites must target THIS snapshot
-            assert path.endswith(f"snap-{snap_id}"), (
-                f"prewritten {name} targets {path}, commit is snap-{snap_id}"
-            )
+            if os.path.basename(path) != f"snap-{snap_id}":
+                raise RuntimeError(
+                    f"prewritten {name} targets {path}, commit is snap-{snap_id}"
+                )
         parent_tables = self.snapshot(parent)["tables"] if parent is not None else {}
         manifest_tables: dict[str, str | list] = {}
         for t in carry_tables or []:
@@ -263,7 +264,8 @@ class IceLite:
         # share executors) — commit-phase attribution for the scaling
         # harness; read via ``last_write_secs`` after commit() returns.
         # Prewritten tables report their (overlapped) write_table walls.
-        write_secs.update(getattr(self, "prewrite_secs", {}))
+        write_secs.update(self.prewrite_secs)
+        self.prewrite_secs = {}
         self.last_write_secs = write_secs
         # prewritten tables join the manifest/stats path as zero-work jobs
         jobs = jobs + [

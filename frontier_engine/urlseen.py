@@ -1,4 +1,4 @@
-"""Partitioned bloom-filter URL-seen set.
+"""Partitioned bloom-filter URL-seen set (the frontier's known set).
 
 Replaces the reference's Redis resume/seen cache (warcio.py:120-134,172-174)
 with engine-owned distributed state:
@@ -10,9 +10,12 @@ with engine-owned distributed state:
   (state size ∝ shards × bitmap, not ∝ rows seen),
 - membership is a broadcast join of the (small) shard table onto candidates
   + a vectorized numpy bit-test in ``mapInPandas``,
-- bloom "maybe-seen" hits get an exact ``left_anti`` pass against the seen
+- bloom "maybe-seen" hits get an exact ``left_anti`` pass against the known
   table: the bloom gives no-false-negative *pruning*, the anti join removes
   the false positives (SURVEY.md §2.3).
+
+The frontier never evicts a URL, so an insert-only bloom is all it needs; a
+deletion-capable filter would buy nothing here.
 
 Scale math (documented for the 10^10 target): 10^10 URLs at 1% FPR need
 ~9.6 bits/URL ≈ 12 GB of bitmap. With 4096 shards that is ~3 MB/shard —
@@ -129,8 +132,8 @@ def extend_shards(
 
     The unfused chain is three Spark stages per maintained bloom table
     (hash shuffle → build groups → bitmap shuffle → merge groups), and the
-    frontier maintains two such tables (seen + known) inside every round
-    commit. Each extra stage is a fixed DAG-scheduling + python-worker
+    frontier maintains the known-set table inside every round commit. Each
+    extra stage is a fixed DAG-scheduling + python-worker
     round-trip per round — measured 28 s for the known-set chain at 16
     one-core executors vs 4.7 s at 4 (the per-stage latency grows with
     executor count while the work per stage is constant). Fusing halves the
@@ -229,151 +232,6 @@ def mark_maybe_seen(candidates: DataFrame, shards: DataFrame, n_shards: int) -> 
             bits = np.unpackbits(np.frombuffer(shard_pdf["filter_bytes"].iloc[0], dtype=np.uint8))
             idx = _indices(cand_pdf["url_hash"].to_numpy(), len(bits), k)
             res = bits[idx].all(axis=0)
-        out["maybe_seen"] = res
-        return out
-
-    return (
-        cand.groupBy("shard_id")
-        .cogroup(shards.select("shard_id", "filter_bytes").groupBy("shard_id"))
-        .applyInPandas(lambda key, c, s: test(c, s), out_schema)
-    )
-
-
-# ------------------------------------------------------------------ cuckoo
-
-CUCKOO_FP_BITS = 16
-CUCKOO_SLOTS = 4  # slots per bucket
-
-
-def _cuckoo_parts(hashes: np.ndarray, n_buckets: int):
-    """(fingerprint, bucket1, bucket2) per hash. fp != 0 (0 marks empty);
-    i2 = i1 XOR hash(fp) — the standard partial-key cuckoo scheme, so either
-    bucket is recoverable from the other + fp (deletion-capable)."""
-    h = hashes.astype(np.uint64)
-    fp = ((h >> np.uint64(48)) & np.uint64(0xFFFF)).astype(np.uint16)
-    fp = np.where(fp == 0, np.uint16(1), fp)
-    i1 = (h % np.uint64(n_buckets)).astype(np.int64)
-    fph = (fp.astype(np.uint64) * np.uint64(0x5BD1E995)) % np.uint64(n_buckets)
-    i2 = (i1.astype(np.uint64) ^ fph) % np.uint64(n_buckets)
-    return fp, i1, i2.astype(np.int64)
-
-
-def build_cuckoo_shards(hashed: DataFrame, n_shards: int = 64, n_buckets: int = 1 << 14) -> DataFrame:
-    """Cuckoo-filter variant of build_shards (north_rule: 'bloom/cuckoo').
-    Same shard table schema; filter_bytes is a (n_buckets × 4) uint16 slot
-    table. Supports deletion (recrawl eviction) unlike the bloom."""
-
-    def build(pdf: pd.DataFrame) -> pd.DataFrame:
-        table = np.zeros((n_buckets, CUCKOO_SLOTS), dtype=np.uint16)
-        rng_state = 0x9E3779B9
-        fp, i1, i2 = _cuckoo_parts(pdf["url_hash"].to_numpy(), n_buckets)
-        n = 0
-        for f, a, b in zip(fp, i1, i2):
-            placed = False
-            for idx in (a, b):
-                row = table[idx]
-                if f in row:  # already present
-                    placed = True
-                    break
-                empty = np.flatnonzero(row == 0)
-                if len(empty):
-                    row[empty[0]] = f
-                    placed = True
-                    break
-            cur, idx = f, a
-            kicks = 0
-            while not placed and kicks < 500:
-                rng_state = (rng_state * 1103515245 + 12345) & 0x7FFFFFFF
-                slot = rng_state % CUCKOO_SLOTS
-                cur, table[idx][slot] = table[idx][slot], cur
-                idx = int((np.uint64(idx) ^ ((np.uint64(cur) * np.uint64(0x5BD1E995)) % np.uint64(n_buckets))) % np.uint64(n_buckets))
-                row = table[idx]
-                empty = np.flatnonzero(row == 0)
-                if len(empty):
-                    row[empty[0]] = cur
-                    placed = True
-                kicks += 1
-            n += 1  # overflow after 500 kicks: drop (caught by exact pass)
-        return pd.DataFrame(
-            {
-                "shard_id": [int(pdf["shard_id"].iloc[0])],
-                "filter_bytes": [table.tobytes()],
-                "n_items": [n],
-                "capacity": [n_buckets * CUCKOO_SLOTS],
-                "fpr": [2.0 * CUCKOO_SLOTS / (1 << CUCKOO_FP_BITS)],
-            }
-        )
-
-    return (
-        hashed.select("url_hash")
-        .withColumn("shard_id", shard_of(F.col("url_hash"), n_shards))
-        .groupBy("shard_id")
-        .applyInPandas(build, SHARD_SCHEMA)
-    )
-
-
-def cuckoo_contains(table_bytes: bytes, hashes: np.ndarray, n_buckets: int) -> np.ndarray:
-    table = np.frombuffer(table_bytes, dtype=np.uint16).reshape(n_buckets, CUCKOO_SLOTS)
-    fp, i1, i2 = _cuckoo_parts(hashes, n_buckets)
-    return ((table[i1] == fp[:, None]).any(axis=1)) | ((table[i2] == fp[:, None]).any(axis=1))
-
-
-def cuckoo_delete_shards(shards: DataFrame, hashed: DataFrame, n_shards: int, n_buckets: int = 1 << 14) -> DataFrame:
-    """Delete hashes from cuckoo shards (re-crawl eviction — the capability
-    blooms lack). Cogrouped pandas: shard row × its deletions."""
-
-    def delete(key, shard_pdf: pd.DataFrame, del_pdf: pd.DataFrame) -> pd.DataFrame:
-        if shard_pdf.empty:
-            return shard_pdf.iloc[0:0]
-        row = shard_pdf.iloc[0]
-        table = np.frombuffer(row.filter_bytes, dtype=np.uint16).reshape(n_buckets, CUCKOO_SLOTS).copy()
-        removed = 0
-        if not del_pdf.empty:
-            fp, i1, i2 = _cuckoo_parts(del_pdf["url_hash"].to_numpy(), n_buckets)
-            for f, a, b in zip(fp, i1, i2):
-                for idx in (a, b):
-                    slots = np.flatnonzero(table[idx] == f)
-                    if len(slots):
-                        table[idx][slots[0]] = 0
-                        removed += 1
-                        break
-        return pd.DataFrame(
-            {
-                "shard_id": [int(row.shard_id)],
-                "filter_bytes": [table.tobytes()],
-                "n_items": [int(row.n_items) - removed],
-                "capacity": [int(row.capacity)],
-                "fpr": [float(row.fpr)],
-            }
-        )
-
-    dels = hashed.select("url_hash").withColumn("shard_id", shard_of(F.col("url_hash"), n_shards))
-    return (
-        shards.groupBy("shard_id")
-        .cogroup(dels.groupBy("shard_id"))
-        .applyInPandas(delete, SHARD_SCHEMA)
-    )
-
-
-def mark_maybe_seen_cuckoo(candidates: DataFrame, shards: DataFrame, n_shards: int, n_buckets: int = 1 << 14) -> DataFrame:
-    """Cuckoo twin of mark_maybe_seen (same shard-cogrouped layout — the slot
-    table is as large as a bloom bitmap and must never be row-replicated)."""
-    cand = candidates.withColumn("shard_id", shard_of(F.col("url_hash"), n_shards))
-    out_schema = T.StructType(
-        list(cand.schema.fields) + [T.StructField("maybe_seen", T.BooleanType(), False)]
-    )
-
-    def test(cand_pdf: pd.DataFrame, shard_pdf: pd.DataFrame) -> pd.DataFrame:
-        out = cand_pdf.copy()
-        if cand_pdf.empty:
-            out["maybe_seen"] = pd.Series([], dtype=bool)
-            return out
-        assert len(shard_pdf) <= 1, f"duplicate urlseen shard rows: {shard_pdf['shard_id'].tolist()}"
-        res = np.zeros(len(cand_pdf), dtype=bool)
-        if not shard_pdf.empty and shard_pdf["filter_bytes"].iloc[0] is not None:
-            res = cuckoo_contains(
-                shard_pdf["filter_bytes"].iloc[0], cand_pdf["url_hash"].to_numpy(), n_buckets
-            )
         out["maybe_seen"] = res
         return out
 

@@ -6,7 +6,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from frontier_engine import pipeline, synth
+from frontier_engine import frontier, pipeline, synth
 from frontier_engine.frontier import FrontierEngine
 
 
@@ -123,7 +123,7 @@ class TestFrontierRounds:
         eng, counters = run3
         for c in counters:
             sid = c["round"] + 1  # snapshot 0 = init
-            for table in ("frontier_log", "frontier_pending", "seen",
+            for table in ("frontier_log", "frontier_pending",
                           "schedule", "meta_docs", "payload_docs"):
                 path = os.path.join(eng.store.root, "data", table, f"snap-{sid}")
                 files = glob.glob(os.path.join(path, "*.parquet"))
@@ -218,6 +218,92 @@ class TestFrontierRounds:
             sum(l["scheduled"] for l in s["lineage"]) == s["counters"]["scheduled"]
             for s in rounds
         )
+
+    @pytest.fixture(scope="class")
+    def run3_bloom(self, spark, tmp_path_factory, crawl_inputs):
+        """``run3`` with link discovery forced onto the sharded-bloom
+        known-set filter (the gate dropped to 0 rows)."""
+        from frontier_engine import urlseen
+
+        _, seeds, robots, pages_prepared = crawl_inputs
+        eng = _mk_engine(spark, tmp_path_factory.mktemp("fr_bloom"), "b")
+        calls = []
+        real_filter = urlseen.filter_unseen
+
+        def counting_filter(*args, **kwargs):
+            calls.append(1)
+            return real_filter(*args, **kwargs)
+
+        with pytest.MonkeyPatch.context() as mp:
+            mp.setattr(frontier, "_KNOWN_BROADCAST_ROWS", 0)
+            mp.setattr(urlseen, "filter_unseen", counting_filter)
+            eng.init(seeds, robots)
+            counters = [eng.run_round(pages_prepared) for _ in range(3)]
+        assert len(calls) == 3  # every round took the bloom path
+        return eng, counters
+
+    @pytest.mark.parametrize("regime", ["run3", "run3_bloom"])
+    def test_pending_never_rescheduled_and_known(self, spark, request, regime):
+        """Each URL enters pending once (after the anti join against the
+        known set) and leaves it when scheduled, so after every round the
+        pending set shares no url_hash with any schedule row so far, and
+        every pending url_hash is in frontier_known."""
+        eng, counters = request.getfixturevalue(regime)
+        for c in counters:
+            sid = c["round"] + 1  # snapshot 0 = init
+            pending = eng.store.read(spark, "frontier_pending", snapshot_id=sid).select("url_hash")
+            sched = eng.store.read(spark, "schedule", snapshot_id=sid).select(
+                F.xxhash64("url_norm").alias("url_hash")
+            )
+            known = eng.store.read(spark, "frontier_known", snapshot_id=sid)
+            assert pending.count() > 0 and sched.count() > 0, sid
+            assert pending.join(sched, "url_hash", "left_semi").count() == 0, sid
+            assert pending.join(known, "url_hash", "left_anti").count() == 0, sid
+
+    def test_known_filter_regimes_agree(self, run3, run3_bloom):
+        eng, counters = run3
+        eng_bloom, counters_bloom = run3_bloom
+        assert counters == counters_bloom
+        assert _schedule_list(eng) == _schedule_list(eng_bloom)
+
+    def test_prewrite_timings_cleared_after_commit(self, spark, run3):
+        """A commit without prewrites reports only its own writes, never
+        the previous round's prewritten tables."""
+        from frontier_engine.icelite import ensure_table
+
+        eng, _ = run3
+        ensure_table(eng.store, spark, "side_table_timed", "k long")
+        assert set(eng.store.last_write_secs) == {"side_table_timed"}
+
+    def test_failed_write_aborts_round_and_retry_matches(self, spark, tmp_path, run3, crawl_inputs):
+        """A raising table write fails the round before its commit point,
+        shuts down the round's thread pool, and a retry commits the same
+        counters as a clean run."""
+        import threading
+
+        _, seeds, robots, pages_prepared = crawl_inputs
+        eng = _mk_engine(spark, tmp_path, "failing_write")
+        eng.init(seeds, robots)
+        sid = eng.store.current_snapshot_id()
+        real_write = eng.store.write_table
+
+        def failing_write(name, df, snap_id):
+            if name == "meta_docs":
+                raise OSError("injected meta_docs write failure")
+            return real_write(name, df, snap_id)
+
+        threads_before = set(threading.enumerate())
+        eng.store.write_table = failing_write
+        with pytest.raises(OSError, match="injected"):
+            eng.run_round(pages_prepared)
+        leaked = [
+            t for t in threading.enumerate()
+            if t not in threads_before and t.name.startswith("ThreadPoolExecutor")
+        ]
+        assert not leaked, leaked
+        assert eng.store.current_snapshot_id() == sid
+        eng.store.write_table = real_write
+        assert eng.run_round(pages_prepared) == run3[1][0]
 
 
 class TestResumeDeterminism:
