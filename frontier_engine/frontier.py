@@ -40,14 +40,20 @@ schedules order by (priority DESC, idx_id ASC) per host. A killed job
 resumes from the last committed snapshot with an identical schedule
 (tests/test_frontier.py::test_resume_determinism).
 
-Scale: the only frontier-wide shuffles are the known-set anti join (bloom-
-pruned to its maybe-member survivors) and the per-host window/groupBy; the
-pages fetch join is an equi join on url_norm that AQE turns into a broadcast
-when the scheduled set is small.
+Scale: two gates, read from the parent manifest (no count job), pick each
+join's strategy; every regime gives the same results (tests/test_golden.py
+runs the goldens in all four). Known sets up to _KNOWN_BROADCAST_ROWS rows
+take a broadcast anti join, larger ones the known_shards bloom prefilter +
+exact anti join. Schedules up to _FETCH_BROADCAST_ROWS rows are broadcast
+into the fetch join, so the html-heavy pages side never shuffles; larger
+ones take a plain equi join on url_norm, whose hash partitioning already
+spreads a hot host's URLs evenly. The only other frontier-wide shuffle is
+the per-host window/groupBy.
 """
 
 from __future__ import annotations
 
+import os
 from typing import Optional
 
 import pandas as pd
@@ -75,6 +81,21 @@ PRIORITY_DECAY = 0.5
 # Known-set sizes up to this many rows take the broadcast anti join at link
 # discovery; larger sets take the sharded-bloom prefilter + exact anti join.
 _KNOWN_BROADCAST_ROWS = 1_000_000
+# Schedules up to this many rows are broadcast into the fetch join. ~120 B/row
+# of (url_norm, host, 4 scalars) → ≈1 GB at the limit, safely under Spark's
+# 8 GB broadcast ceiling / driver heap.
+_FETCH_BROADCAST_ROWS = 8_000_000
+
+
+def _known_rows(snap: dict) -> Optional[int]:
+    """Rows of ``frontier_known`` summed from the manifest's per-file row
+    stats, or None when any of its dirs has none (stores written before the
+    table declared stats)."""
+    dirs = snap["tables"]["frontier_known"]
+    stats = snap.get("stats", {}).get("frontier_known", {})
+    if not set(dirs) <= {os.path.dirname(f) for f in stats}:
+        return None
+    return sum(s["rows"] for s in stats.values())
 
 
 def candidates_from_urls(df: DataFrame, round_no: int, id_prefix: str,
@@ -154,22 +175,21 @@ class FrontierEngine:
         n_shards: int = 64,
         bloom_bits: int = 1 << 20,
         budget: int = politeness.DEFAULT_BUDGET,
-        broadcast_row_limit: int = 8_000_000,
     ):
         self.spark = spark
         # round-keyed append tables declare file stats so readers prune to
-        # the rounds they want (Iceberg manifest min/max semantics)
+        # the rounds they want (Iceberg manifest min/max semantics); the
+        # known set's per-file row counts size its anti-join gate
         self.store = IceLite(
             store_root,
-            stats_columns={"frontier_log": "round", "schedule": "round"},
+            stats_columns={
+                "frontier_log": "round", "schedule": "round", "frontier_known": "url_hash",
+            },
         )
         self.id_prefix = id_prefix
         self.n_shards = n_shards
         self.bloom_bits = bloom_bits
         self.budget = budget
-        # ~120 B/row of (url_norm, host, 4 scalars) → ≈1 GB at the limit,
-        # safely under Spark's 8 GB broadcast ceiling / driver heap
-        self.broadcast_row_limit = broadcast_row_limit
 
     # ------------------------------------------------------------- state
 
@@ -206,7 +226,8 @@ class FrontierEngine:
         (``pipeline.canonicalized`` + ``pipeline.dedup_newest`` applied).
         Returns the committed counters."""
         spark = self.spark
-        prev_counters = self.store.snapshot(self.store.current_snapshot_id())["counters"]
+        parent = self.store.snapshot(self.store.current_snapshot_id())
+        prev_counters = parent["counters"]
         round_no = prev_counters.get("round", -1) + 1
         # carried from the parent snapshot — no count() job needed
         n_pending_in = prev_counters["pending_out"]
@@ -236,21 +257,16 @@ class FrontierEngine:
         # broadcast is CONDITIONAL, decided from the PARENT SNAPSHOT's
         # pending_out counter (scheduled ⊆ pending, so pending_in is a free
         # upper bound — no count() job, no extra round barrier): above
-        # ``broadcast_row_limit`` candidate rows the hint could exceed
+        # ``_FETCH_BROADCAST_ROWS`` candidate rows the hint could exceed
         # driver/broadcast limits, so fall back to a shuffle join and let
-        # AQE pick the strategy. At 10^10 scale the fallback is a bucketed
-        # shuffle-hash join on url_norm (pages bucketed at write time).
+        # AQE pick the strategy.
         fetch_cols = ["url_norm", "url_hash", "host", "priority", "idx_id", "seq"]
         sched_small = scheduled.select(*fetch_cols)
-        use_broadcast = n_pending_in <= self.broadcast_row_limit
+        use_broadcast = n_pending_in <= _FETCH_BROADCAST_ROWS
         if not use_broadcast:
-            # pending_in is only an upper bound: the schedule itself is
-            # budget-bounded (≤ budget × hosts) and typically tiny even
-            # when the frontier is huge — exactly the regime the broadcast
-            # was built for. One count() on the already-persisted schedule
-            # decides precisely (and eagerly materializes the cache the
-            # fetch join reuses).
-            use_broadcast = scheduled.count() <= self.broadcast_row_limit
+            # pending_in is only an upper bound and the schedule is budget-
+            # bounded: one count() on its cache decides precisely
+            use_broadcast = scheduled.count() <= _FETCH_BROADCAST_ROWS
         if use_broadcast:
             sched_small = F.broadcast(sched_small)
         # NOT persisted: ``html`` flows through this frame exactly once, into
@@ -263,7 +279,6 @@ class FrontierEngine:
             pages_prepared.select("url_norm", "url", "warc_ts", "html"), "url_norm", "inner"
         )
 
-        import os
         import time as _time
 
         timing_on = os.environ.get("FRONTIER_TIMING")
@@ -276,35 +291,21 @@ class FrontierEngine:
 
         _t = _time.perf_counter()
 
-        if os.environ.get("FRONTIER_PROFILE"):
-            # Diagnostic sub-phase attribution (opt-in: the staged counts
-            # add actions, slightly distorting the fused-phase number, so
-            # never on in the headline protocol). Each frame is persisted
-            # anyway — the staged count materializes the same cache the
-            # fused action would have built, splitting the lazy chain at
-            # its shuffle barriers.
-            sched_all.count()
-            _t = _mark("p_robots_schedule", _t)
-
         # 5. process fetched pages (extraction pipeline; idx_id from page
         # identity). In the broadcast-fetch regime the join output inherits
         # the pages scan/cache partitioning — hash-random in url space, so
         # host-skew-free by construction — and scan, broadcast probe and
         # extraction UDF fuse into ONE stage with no shuffle touching html.
-        # Only the shuffle-join fallback (frontier too big to bound the
-        # schedule) still salts: there the exchange exists anyway, and hot
-        # hosts would otherwise concentrate in single post-shuffle tasks.
+        # The shuffle-join fallback partitions by hash(url_norm), equally
+        # host-skew-free, so the extraction UDF reads the join output as is
+        # (html crosses one exchange, never two; plan-tested).
         # ``html`` is dropped BEFORE the persist: downstream consumers
         # (marks, links, counters, meta/payload projections) never read it,
         # so caching it would pay a columnar encode per round for bytes
         # nobody decodes — and proc is the ONLY per-round cache of fetched
         # pages (the join output itself is deliberately unpersisted above).
         n_part = spark.sparkContext.defaultParallelism * 2
-        proc = pipeline.processed(
-            fetched_rows,
-            id_prefix=self.id_prefix,
-            repartition_to=None if use_broadcast else n_part,
-        ).drop("html").persist()
+        proc = pipeline.processed(fetched_rows, id_prefix=self.id_prefix).drop("html").persist()
         # materialize the extraction cache BEFORE the fused counters job:
         # its tagged-union branches (new_frontier via discovered links, and
         # the docs branch) both read proc, and concurrent branches of one
@@ -412,28 +413,21 @@ class FrontierEngine:
         # reach the exact left_anti). Without this, the append-only known
         # table — ~80 GB of hashes at 10^10 URLs — shuffles in full every round;
         # with it the exact join input is ≈ |discovered ∩ known| + FPR·rest.
-        # r6: while the known set is still broadcast-sized (~16 B/hash;
-        # known_total is the exact append count summed from snapshot
-        # counters — no job), a broadcast hash anti join beats the bloom
-        # mark + exact anti outright: the bloom exists to prune a SHUFFLE
-        # the broadcast regime never pays.
-        # known_shards is None only for stores created before this table
-        # existed — fall back to the plain exact anti join there.
-        known_total = sum(
-            s.get("counters", {}).get("seeded", 0)
-            + s.get("counters", {}).get("discovered_new", 0)
-            for s in self.store.snapshots()
-        )
-        if known_total <= _KNOWN_BROADCAST_ROWS:
+        # While the known set is still broadcast-sized (~16 B/hash; its row
+        # count is summed from the parent manifest's file stats — no job), a
+        # broadcast hash anti join beats the bloom mark + exact anti
+        # outright: the bloom exists to prune a SHUFFLE the broadcast regime
+        # never pays. A store without those stats takes the (exact) bloom
+        # path.
+        known_rows = _known_rows(parent)
+        if known_rows is not None and known_rows <= _KNOWN_BROADCAST_ROWS:
             new_pending = discovered.join(
                 F.broadcast(known.select("url_hash")), "url_hash", "left_anti"
             )
-        elif known_shards is not None:
+        else:
             new_pending = urlseen.filter_unseen(
                 discovered, known_shards, known, self.n_shards
             )
-        else:
-            new_pending = discovered.join(known.select("url_hash"), "url_hash", "left_anti")
         pending_new = leftover.unionByName(new_pending).persist()
         # known-set bloom kept in lockstep: this round's newly-admitted
         # hashes (round == round_no+1 rows of the pending cache — the same
@@ -443,15 +437,12 @@ class FrontierEngine:
         # (false positives only add rows to the exact join). FUSED
         # build+merge (extend_shards): one shuffle + one pandas stage instead
         # of build → bitmap-shuffle → merge (bit-identical, property-tested).
-        if known_shards is not None:
-            new_known_shards = urlseen.extend_shards(
-                known_shards,
-                pending_new.where(F.col("round") == round_no + 1).select("url_hash"),
-                self.n_shards,
-                self.bloom_bits,
-            )
-        else:
-            new_known_shards = None
+        new_known_shards = urlseen.extend_shards(
+            known_shards,
+            pending_new.where(F.col("round") == round_no + 1).select("url_hash"),
+            self.n_shards,
+            self.bloom_bits,
+        )
 
         # Overlap independent writes with the counters job (guide §2.6):
         # meta/payload are pure projections of the proc cache — materialized
@@ -473,14 +464,6 @@ class FrontierEngine:
                 for name, df in (("meta_docs", meta), ("payload_docs", payload))
             }
 
-            if os.environ.get("FRONTIER_PROFILE"):
-                # split the counters job's inputs (opt-in, distorts the fused
-                # numbers): settled materialization vs the link-discovery UDF
-                # chain behind pending_new, measured sequentially
-                settled_delta.count()
-                _t = _mark("p_settled_materialize", _t)
-                pending_new.count()
-                _t = _mark("p_pending_links_udf", _t)
             # ALL round metrics via four CONCURRENT per-frame aggregations in
             # the same pool as the early writes (guide §2.6) — the
             # Metrics.counter analog, process.py:120. The settled/pending aggs
@@ -540,6 +523,13 @@ class FrontierEngine:
         }
         counters["pending_out"] = counters["skipped_budget"] + counters["discovered_new"]
         counters["seen_total"] = seen_total + n_scheduled
+        # skipped_budget is derived, so the balance identity holds by
+        # construction: check it against the leftover (admitted in rounds ≤
+        # round_no) the pending aggregation counted, before the commit point
+        n_leftover = sum(n for (st, r), n in status_counts.items() if st == "pending" and r <= round_no)
+        if n_leftover != counters["skipped_budget"]:
+            raise RuntimeError(f"round {round_no}: {n_leftover} pending rows left over, "
+                               f"counters say skipped_budget={counters['skipped_budget']}")
         # Delta sizing uses the EXACT per-frame counts the fused counters
         # job just computed — not the n_pending_in upper bound, which for
         # the budget-bounded frames (schedule: ≤ budget × hosts; known
@@ -553,9 +543,8 @@ class FrontierEngine:
             # partitions for the write — no recompute, no serialized
             # upstream chain
             "frontier_pending": _sized(pending_new, counters["pending_out"]),
+            "known_shards": new_known_shards,
         }
-        if new_known_shards is not None:
-            tables["known_shards"] = new_known_shards
         self.store.commit(
             tables=tables,
             append_tables={
@@ -585,11 +574,6 @@ class FrontierEngine:
         )
         _mark("commit_writes", _t)
         if timing_on:
-            if os.environ.get("FRONTIER_PROFILE"):
-                ws = getattr(self.store, "last_write_secs", None)
-                if ws:  # per-table commit attribution (diagnostic only:
-                    # non-numeric phase values stay out of ledger runs)
-                    phases["p_write_secs"] = ws
             print(f"[frontier-timing] round {round_no}: {phases}", flush=True)
             counters["phases"] = phases  # machine-readable (scaling harness)
         for df in (pending, sched_all, proc, settled_delta, pending_new):

@@ -66,7 +66,6 @@ class IceLite:
         reads only — no data scan."""
         self.root = root
         self.stats_columns = stats_columns or {}
-        self.prewrite_secs: dict[str, float] = {}
         os.makedirs(os.path.join(root, "metadata"), exist_ok=True)
         os.makedirs(os.path.join(root, "data"), exist_ok=True)
 
@@ -153,20 +152,17 @@ class IceLite:
         ``prewritten`` (guide §2.6 job overlap); a crash before the commit
         point leaves them as inert orphans, exactly like an aborted
         commit's own writes."""
-        self.prewrite_secs = {}  # reset before any write_table calls
         cur = self.current_snapshot_id()
         return 0 if cur is None else cur + 1
 
-    def _write_dataset(self, df: DataFrame, path: str) -> float:
-        """Write one table dir (orphan-guarded, errorifexists) and return
-        the wall seconds. snap ids are strictly newer than every COMMITTED
-        snapshot, so an existing dir at this path can only be an orphan
-        from a crash between data writes and the current.json commit
-        point. Atomically RENAME it aside before deleting: a
-        contract-violating concurrent same-id writer then still fails
-        loudly on its own errorifexists write (whoever wins the rename
-        removes only the dir it renamed)."""
-        t0 = time.perf_counter()
+    def _write_dataset(self, df: DataFrame, path: str) -> None:
+        """Write one table dir (orphan-guarded, errorifexists). snap ids
+        are strictly newer than every COMMITTED snapshot, so an existing
+        dir at this path can only be an orphan from a crash between data
+        writes and the current.json commit point. Atomically RENAME it
+        aside before deleting: a contract-violating concurrent same-id
+        writer then still fails loudly on its own errorifexists write
+        (whoever wins the rename removes only the dir it renamed)."""
         if os.path.exists(path):
             import shutil
 
@@ -178,14 +174,13 @@ class IceLite:
             else:
                 shutil.rmtree(orphan, ignore_errors=True)
         df.write.mode("errorifexists").parquet(path)
-        return round(time.perf_counter() - t0, 2)
 
     def write_table(self, name: str, df: DataFrame, snap_id: int) -> str:
         """Eagerly write ``name`` for the upcoming snapshot ``snap_id``
         (from ``next_snapshot_id``); pass the returned path to ``commit``'s
         ``prewritten``. The write happens NOW, on the caller's thread."""
         path = os.path.join(self.root, "data", name, f"snap-{snap_id}")
-        self.prewrite_secs[name] = self._write_dataset(df, path)
+        self._write_dataset(df, path)
         return path
 
     def commit(
@@ -239,11 +234,9 @@ class IceLite:
         for name, df in (append_tables or {}).items():
             jobs.append((name, df, os.path.join(self.root, "data", name, f"snap-{snap_id}"), True))
 
-        write_secs: dict[str, float] = {}
-
         def _write(job):
-            name, df, path, _ = job
-            write_secs[name] = self._write_dataset(df, path)
+            _, df, path, _ = job
+            self._write_dataset(df, path)
 
         if len(jobs) > 1:
             from concurrent.futures import ThreadPoolExecutor
@@ -260,13 +253,6 @@ class IceLite:
         else:
             for job in jobs:
                 _write(job)
-        # per-table wall seconds (wall, not CPU: pool-overlapped writes
-        # share executors) — commit-phase attribution for the scaling
-        # harness; read via ``last_write_secs`` after commit() returns.
-        # Prewritten tables report their (overlapped) write_table walls.
-        write_secs.update(self.prewrite_secs)
-        self.prewrite_secs = {}
-        self.last_write_secs = write_secs
         # prewritten tables join the manifest/stats path as zero-work jobs
         jobs = jobs + [
             (name, None, path, is_append)

@@ -96,17 +96,6 @@ PAYLOAD_COLUMNS = [
 
 # ---------------------------------------------------------------- stages
 
-def salted_repartition(df: DataFrame, n: int, salt: int = 8) -> DataFrame:
-    """Salted host-hash repartition before a compute-heavy UDF stage
-    (north_star skew defense; the reference's Reshuffle fusion-break analog,
-    warcio.py:69). Hot hosts spread over ``salt`` partitions; explicit
-    because AQE coalesces by *bytes* and cannot see that the extraction UDF
-    is ~10³× heavier per byte than a relational op."""
-    host_bucket = F.pmod(F.xxhash64(F.col("host")), F.lit(1 << 20))  # bounded: no ANSI overflow
-    key = host_bucket * salt + F.pmod(F.coalesce(F.col("url_hash"), F.lit(0)), F.lit(salt))
-    return df.repartition(n, key)
-
-
 def partition_by_doc_id(df: DataFrame, n: int, id_col: str = "idx_id") -> DataFrame:
     """Range-partition output docs by document id — the reference's
     ``uuid_prefix_partitioner`` (index.py:50-51: partition = uuid_int·n/16³²)
@@ -208,14 +197,9 @@ def make_process_udf(id_prefix: str, max_payload_size: int = oracle.MAX_DOCUMENT
     return _process
 
 
-def processed(df: DataFrame, id_prefix: str = "synth", repartition_to: int | None = None, **kw) -> DataFrame:
-    """pages (canonicalized, deduped) → one row per doc with `doc` struct.
-
-    ``repartition_to``: salted-repartition width for the extraction stage
-    (pass ~2× cores; None = keep upstream partitioning).
-    """
-    if repartition_to:
-        df = salted_repartition(df, repartition_to)
+def processed(df: DataFrame, id_prefix: str = "synth", **kw) -> DataFrame:
+    """pages (canonicalized, deduped) → one row per doc with `doc` struct,
+    in the input's partitioning."""
     udf = make_process_udf(id_prefix, **kw)
     # cast: parquet written by pyarrow is TIMESTAMP_NTZ; session TZ is UTC,
     # so the cast to (LTZ) timestamp is exact
@@ -324,7 +308,7 @@ def run_pipeline(pages: DataFrame, id_prefix: str = "synth", always_index_meta: 
     width explicitly)."""
     n_part = pages.sparkSession.sparkContext.defaultParallelism * 2
     prepared = dedup_newest(canonicalized(pages).repartition(n_part, F.col("url_norm")))
-    proc = processed(prepared, id_prefix=id_prefix, repartition_to=None)
+    proc = processed(prepared, id_prefix=id_prefix)
     proc = proc.persist()
     return {
         "proc": proc,

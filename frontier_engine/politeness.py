@@ -116,7 +116,11 @@ def apply_robots_gate(candidates: DataFrame, robots: DataFrame) -> DataFrame:
 
     path = F.coalesce(F.parse_url(F.col("url_norm"), F.lit("PATH")), F.lit("/"))
     joined = candidates.join(F.broadcast(robots), "host", "left")
-    g = gate(F.col("robots_txt"), path)
+    # Marked nondeterministic only to pin it in its projection: a filter on
+    # robots_allowed would otherwise be pushed below it, and the pushed copy
+    # runs the kernel a second time on every row (two ArrowEvalPython nodes,
+    # plan-tested). The kernel itself is a pure function of its inputs.
+    g = gate.asNondeterministic()(F.col("robots_txt"), path)
     return (
         joined.withColumn("_g", g)
         .withColumn("robots_allowed", F.col("_g.allowed"))

@@ -220,23 +220,14 @@ class TestFrontierRounds:
         )
 
     @pytest.fixture(scope="class")
-    def run3_bloom(self, spark, tmp_path_factory, crawl_inputs):
+    def run3_bloom(self, spark, tmp_path_factory, crawl_inputs, round_paths):
         """``run3`` with link discovery forced onto the sharded-bloom
         known-set filter (the gate dropped to 0 rows)."""
-        from frontier_engine import urlseen
-
         _, seeds, robots, pages_prepared = crawl_inputs
         eng = _mk_engine(spark, tmp_path_factory.mktemp("fr_bloom"), "b")
-        calls = []
-        real_filter = urlseen.filter_unseen
-
-        def counting_filter(*args, **kwargs):
-            calls.append(1)
-            return real_filter(*args, **kwargs)
-
         with pytest.MonkeyPatch.context() as mp:
             mp.setattr(frontier, "_KNOWN_BROADCAST_ROWS", 0)
-            mp.setattr(urlseen, "filter_unseen", counting_filter)
+            calls, _ = round_paths(mp)
             eng.init(seeds, robots)
             counters = [eng.run_round(pages_prepared) for _ in range(3)]
         assert len(calls) == 3  # every round took the bloom path
@@ -266,14 +257,65 @@ class TestFrontierRounds:
         assert counters == counters_bloom
         assert _schedule_list(eng) == _schedule_list(eng_bloom)
 
-    def test_prewrite_timings_cleared_after_commit(self, spark, run3):
-        """A commit without prewrites reports only its own writes, never
-        the previous round's prewritten tables."""
-        from frontier_engine.icelite import ensure_table
+    def test_known_rows_survive_ensure_table(self, spark, tmp_path, crawl_inputs, round_paths):
+        """The known-set gate sums frontier_known's per-file row stats from
+        the parent manifest. An ensure_table commit between rounds copies
+        the counters but adds no known rows, so the sum stays exact and the
+        broadcast anti join still runs."""
+        from frontier_engine.icelite import IceLite, ensure_table
 
-        eng, _ = run3
-        ensure_table(eng.store, spark, "side_table_timed", "k long")
-        assert set(eng.store.last_write_secs) == {"side_table_timed"}
+        _, seeds, robots, pages_prepared = crawl_inputs
+        eng = _mk_engine(spark, tmp_path, "ensure")
+        eng.init(seeds, robots)
+        ensure_table(IceLite(eng.store.root), spark, "side_table", "k long")
+
+        def known_rows_match():
+            snap = eng.store.snapshot(eng.store.current_snapshot_id())
+            return frontier._known_rows(snap) == eng.store.read(spark, "frontier_known").count()
+
+        assert known_rows_match()
+        with pytest.MonkeyPatch.context() as mp:
+            bloom_calls, _ = round_paths(mp)
+            eng.run_round(pages_prepared)
+        assert bloom_calls == [] and known_rows_match()
+
+    def test_store_without_known_stats_takes_bloom_path(self, spark, tmp_path, run3, crawl_inputs,
+                                                        round_paths):
+        """A store whose frontier_known files carry no row stats (written
+        before the table declared them) cannot size the gate, so link
+        discovery takes the exact bloom path, with the same results."""
+        _, seeds, robots, pages_prepared = crawl_inputs
+        eng = _mk_engine(spark, tmp_path, "statless_known")
+        declared = eng.store.stats_columns
+        eng.store.stats_columns = {t: c for t, c in declared.items() if t != "frontier_known"}
+        eng.init(seeds, robots)
+        eng.store.stats_columns = declared
+        with pytest.MonkeyPatch.context() as mp:
+            calls, _ = round_paths(mp)
+            counters = [eng.run_round(pages_prepared) for _ in range(2)]
+        assert len(calls) == 2
+        eng_clean, counters_clean = run3
+        assert counters == counters_clean[:2]
+        assert _schedule_list(eng) == [s for s in _schedule_list(eng_clean) if s[0] < 2]
+
+    def test_counter_mismatch_raises_before_commit(self, spark, tmp_path, crawl_inputs):
+        """A parent snapshot whose pending_out disagrees with its
+        frontier_pending rows fails the counter check, and nothing is
+        committed."""
+        import json
+
+        _, seeds, robots, pages_prepared = crawl_inputs
+        eng = _mk_engine(spark, tmp_path, "bad_counters")
+        sid = eng.init(seeds, robots)
+        path = eng.store._meta_path(sid)
+        with open(path) as f:
+            snap = json.load(f)
+        snap["counters"]["pending_out"] += 1
+        with open(path, "w") as f:
+            json.dump(snap, f)
+        with pytest.raises(RuntimeError, match="skipped_budget"):
+            eng.run_round(pages_prepared)
+        assert eng.store.current_snapshot_id() == sid
 
     def test_failed_write_aborts_round_and_retry_matches(self, spark, tmp_path, run3, crawl_inputs):
         """A raising table write fails the round before its commit point,
@@ -310,6 +352,22 @@ class TestResumeDeterminism:
     def test_resume_identical_schedule(self, spark, tmp_path, crawl_inputs):
         """north_rule: killed job resumes mid-crawl with identical ordering.
         3 uninterrupted rounds ≡ 1 round + process restart + 2 rounds."""
+        self._check_resume(spark, tmp_path, crawl_inputs)
+
+    def test_resume_identical_schedule_bloom_shuffle(self, spark, tmp_path, crawl_inputs,
+                                                     round_paths):
+        """The same resume gate with both row gates at 0: bloom known-set
+        filter and shuffle fetch join in every round."""
+        with pytest.MonkeyPatch.context() as mp:
+            mp.setattr(frontier, "_KNOWN_BROADCAST_ROWS", 0)
+            mp.setattr(frontier, "_FETCH_BROADCAST_ROWS", 0)
+            bloom_calls, fetch_hints = round_paths(mp)
+            self._check_resume(spark, tmp_path, crawl_inputs)
+        # 3 uninterrupted + 1 + 2 resumed rounds
+        assert len(bloom_calls) == 6 and fetch_hints == [False] * 6
+
+    @staticmethod
+    def _check_resume(spark, tmp_path, crawl_inputs):
         _, seeds, robots, pages_prepared = crawl_inputs
 
         eng_a = _mk_engine(spark, tmp_path, "uninterrupted")

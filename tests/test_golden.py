@@ -12,7 +12,7 @@ import tempfile
 
 import pytest
 
-from frontier_engine import pipeline, synth
+from frontier_engine import frontier, pipeline, synth
 from frontier_engine.frontier import FrontierEngine
 
 GOLDEN = os.path.join(os.path.dirname(__file__), "golden", "crawl_golden.json")
@@ -24,8 +24,19 @@ def golden():
         return json.load(f)
 
 
-@pytest.fixture(scope="module")
-def crawl(spark, pages_pdf, tmp_path_factory):
+# {known filter} × {fetch join}: each "bloom"/"shuffle" regime is forced by
+# dropping its row gate to 0.
+REGIMES = [
+    ("broadcast", "broadcast"),
+    ("bloom", "broadcast"),
+    ("broadcast", "shuffle"),
+    ("bloom", "shuffle"),
+]
+
+
+@pytest.fixture(scope="module", params=REGIMES, ids=lambda r: f"known_{r[0]}-fetch_{r[1]}")
+def crawl(request, spark, pages_pdf, tmp_path_factory, round_paths):
+    known_regime, fetch_regime = request.param
     pages = spark.createDataFrame(pages_pdf)
     seeds = spark.createDataFrame(synth.generate_seeds(pages_pdf, n_seeds=40))
     robots = spark.createDataFrame(synth.generate_robots(pages_pdf))
@@ -33,8 +44,17 @@ def crawl(spark, pages_pdf, tmp_path_factory):
     eng = FrontierEngine(
         spark, str(tmp_path_factory.mktemp("golden")), n_shards=8, bloom_bits=1 << 16, budget=5
     )
-    eng.init(seeds, robots)
-    counters = [eng.run_round(prepared) for _ in range(2)]
+    with pytest.MonkeyPatch.context() as mp:
+        if known_regime == "bloom":
+            mp.setattr(frontier, "_KNOWN_BROADCAST_ROWS", 0)
+        if fetch_regime == "shuffle":
+            mp.setattr(frontier, "_FETCH_BROADCAST_ROWS", 0)
+        bloom_calls, fetch_hints = round_paths(mp)
+        eng.init(seeds, robots)
+        counters = [eng.run_round(prepared) for _ in range(2)]
+    # the forced paths ran in every round
+    assert len(bloom_calls) == (2 if known_regime == "bloom" else 0)
+    assert fetch_hints == [fetch_regime == "broadcast"] * 2
     return eng, counters
 
 

@@ -166,6 +166,53 @@ class TestPlanShapes:
         exact = {r.url_hash for r in cand.join(known, "url_hash", "left_anti").collect()}
         assert {r.url_hash for r in out.collect()} == exact
 
+    def test_robots_gate_evaluated_once_per_branch(self, spark):
+        """A filter on robots_allowed must not be pushed below the gate's
+        projection: the pushed copy would run the Python kernel a second
+        time on every candidate row."""
+        from frontier_engine import politeness
+
+        cand = spark.createDataFrame(
+            [("a.com", "http://a.com/x"), ("b.com", "http://b.com/y")], "host string, url_norm string"
+        )
+        robots = spark.createDataFrame(
+            [("a.com", "User-agent: *\nDisallow: /x\n")], "host string, robots_txt string"
+        )
+        gated = politeness.apply_robots_gate(cand, robots)
+        for branch, want in (("robots_allowed", ["b.com"]), ("NOT robots_allowed", ["a.com"])):
+            df = gated.where(branch)
+            assert plan_of(df).count("ArrowEvalPython") == 1, plan_of(df)
+            assert [r.host for r in df.collect()] == want
+
+    def test_shuffle_fetch_moves_html_once(self, spark, tmp_path, pages_pdf):
+        """In the shuffle-fetch regime the extraction UDF reads the fetch
+        join's url_norm-partitioned output directly: no REPARTITION_BY_NUM
+        exchange moves the html a second time."""
+        from frontier_engine import frontier, pipeline, synth
+
+        pages = spark.createDataFrame(pages_pdf)
+        prepared = pipeline.dedup_newest(pipeline.canonicalized(pages)).persist()
+        eng = frontier.FrontierEngine(spark, str(tmp_path / "store"), n_shards=8,
+                                      bloom_bits=1 << 16, budget=5)
+        eng.init(spark.createDataFrame(synth.generate_seeds(pages_pdf, n_seeds=40)),
+                 spark.createDataFrame(synth.generate_robots(pages_pdf)))
+        plans, processed = [], pipeline.processed
+
+        def spy(df, *args, **kwargs):
+            out = processed(df, *args, **kwargs)
+            plans.append((optimized_of(df), plan_of(out)))
+            return out
+
+        with pytest.MonkeyPatch.context() as mp:
+            mp.setattr(frontier, "_FETCH_BROADCAST_ROWS", 0)
+            mp.setattr(pipeline, "processed", spy)
+            eng.run_round(prepared)
+        prepared.unpersist()
+        [(fetch_join, extraction)] = plans
+        assert "Join Inner" in fetch_join and "strategy=broadcast" not in fetch_join
+        assert "ArrowEvalPython" in extraction
+        assert "REPARTITION_BY_NUM" not in extraction, extraction
+
 
 class TestKmeansPlan:
     def test_assignment_is_shuffle_free(self, spark):
