@@ -39,7 +39,6 @@ from html import unescape
 from html.parser import HTMLParser
 from typing import List, Optional, Tuple
 
-import pandas as pd
 
 # --------------------------------------------------------------------------
 # Charset detection & decoding  (charset ladder, SURVEY.md §2.8)
@@ -538,19 +537,3 @@ def detect_lang(text: str) -> Tuple[str, float]:
     if best_hits == 0 or score < 0.02:
         return "unknown", 0.0
     return best_lang, min(1.0, score * 5)
-
-
-# --------------------------------------------------------------------------
-# Vectorized wrappers (Arrow-batch entry points)
-# --------------------------------------------------------------------------
-
-def detect_encoding_series(payloads: pd.Series) -> pd.Series:
-    return payloads.map(detect_encoding, na_action="ignore")
-
-
-def detect_mime_series(payloads: pd.Series) -> pd.Series:
-    return payloads.map(detect_mime, na_action="ignore")
-
-
-def detect_lang_series(texts: pd.Series) -> pd.Series:
-    return texts.map(lambda t: detect_lang(t)[0], na_action="ignore")

@@ -10,10 +10,11 @@ Each round (north_rule pipeline):
     5. process           extraction pipeline               (pipeline.py)
     6. discover          links → canonicalize → known-set bloom prefilter
                          + exact left_anti → new pending candidates
-    7. commit            IceLite snapshot: pending/known-bloom replaced,
-                         settled-log/known/schedule/meta/payload APPENDED,
-                         counters + per-partition lineage in the manifest
-                         (icelite.py)
+    7. commit            one IceLite commit writes all seven round tables:
+                         pending/known-bloom replaced, settled-log/known/
+                         schedule/meta/payload APPENDED, each sized from the
+                         round's exact counters; counters + per-partition
+                         lineage in the manifest (icelite.py)
 
 Why step 1 is empty: frontier_known is the one URL-seen set. A URL enters
 pending only through step 6's anti join against it (or as a seed, which
@@ -316,13 +317,12 @@ class FrontierEngine:
             proc.select("url_norm"), "url_norm", "left_anti"
         )
 
-        # Counter-driven partition sizing for round-delta WRITES (no
-        # count() job — the parent snapshot's pending_out bounds settled ∪
-        # leftover, and scheduled/fetched/meta/payload are budget-bounded
-        # subsets of it). The deltas are unions/projections of upstream
-        # caches and would otherwise inherit the SUM of their parents'
-        # partition counts — dozens of near-empty parquet files per commit,
-        # a fixed per-round cost that caps small-round scaling.
+        # Counter-driven partition sizing for round-delta WRITES: every
+        # written frame is sized from the EXACT row count the counters job
+        # below computes (no count() job). The deltas are unions/projections
+        # of upstream caches and would otherwise inherit the SUM of their
+        # parents' partition counts — dozens of near-empty parquet files per
+        # commit, a fixed per-round cost that caps small-round scaling.
         #
         # CRITICAL placement rule, measured the hard way: coalesce ONLY on
         # the write side of a persist boundary (or on pure projections of
@@ -335,8 +335,7 @@ class FrontierEngine:
         # intermittent with AQE's runtime broadcast decision). At 10^10
         # round sizes the same formula yields ≥ cluster parallelism, so
         # the write files stay right-sized either way.
-        def _sized(df: DataFrame, est_rows: int = n_pending_in,
-                   rows_per_part: int = 65536) -> DataFrame:
+        def _sized(df: DataFrame, est_rows: int, rows_per_part: int = 65536) -> DataFrame:
             # CONTRACT: call only on persisted-and-materialized frames or
             # pure projections of them. df.rdd below compiles a physical
             # plan (and under AQE can eagerly materialize shuffle stages);
@@ -357,17 +356,6 @@ class FrontierEngine:
             if cur < 2 * target:
                 return df
             return df.coalesce(target)
-
-        # meta/payload are write-only pure projections of the materialized
-        # proc cache — coalescing them merges cached partitions, no
-        # recompute; coalesce BEFORE sortWithinPartitions preserves the
-        # sink's per-partition ordering. Their rows are WIDE (payload
-        # carries body + full_body, ~tens of KB/row), so the sizing target
-        # is byte-informed: 64k wide rows in one file is a ~GB single-task
-        # parquet encode that serializes the commit (measured 81 s at
-        # local[4]); 8k rows/file lands in the 100-250 MB lake sweet spot.
-        meta = _sized(pipeline.meta_docs(proc), rows_per_part=16384).sortWithinPartitions("idx_id")
-        payload = _sized(pipeline.payload_docs(proc), rows_per_part=8192).sortWithinPartitions("idx_id")
 
         # 6. discover links → next round's pending candidates (resolve +
         # canonicalize fused into one Arrow stage)
@@ -444,49 +432,32 @@ class FrontierEngine:
             self.bloom_bits,
         )
 
-        # Overlap independent writes with the counters job (guide §2.6):
-        # meta/payload are pure projections of the proc cache — materialized
-        # by the proc job above and UNTOUCHED by the counters job below, so
-        # their commit writes can run on driver threads while the counters
-        # job computes. Their _sized targets never depended on the exact
-        # counters (they size off the parent-snapshot pending_out bound), so
-        # the written files are byte-identical to in-commit writes; the
-        # commit manifests the prewritten paths exactly as its own. A failure
-        # surfaces at fut.result() and aborts before the commit point
-        # (orphans inert); leaving the block waits for every other future,
-        # so no write or aggregation outlives a failed round.
+        # ALL round metrics via four CONCURRENT per-frame aggregations (guide
+        # §2.6) — the Metrics.counter analog, process.py:120. The
+        # settled/pending aggs double as the materialization of those caches
+        # (a groupBy over an unmaterialized persisted frame computes and
+        # caches every partition, exactly like the count() it replaces); the
+        # scheduled/proc aggs read caches the fused job above already
+        # materialized. Running the four small aggs concurrently folds the
+        # whole counters wall into the materialization window. Keys never
+        # collide across the two status frames (settled statuses ≠
+        # 'pending'). Leaving the block waits for every future, so no
+        # aggregation outlives a failed round.
         from concurrent.futures import ThreadPoolExecutor
 
-        next_sid = self.store.next_snapshot_id()
-        with ThreadPoolExecutor(max_workers=6) as early_pool:
-            early_futs = {
-                name: early_pool.submit(self.store.write_table, name, df, next_sid)
-                for name, df in (("meta_docs", meta), ("payload_docs", payload))
-            }
-
-            # ALL round metrics via four CONCURRENT per-frame aggregations in
-            # the same pool as the early writes (guide §2.6) — the
-            # Metrics.counter analog, process.py:120. The settled/pending aggs
-            # double as the materialization of those caches (a groupBy over
-            # an unmaterialized persisted frame computes and caches every
-            # partition, exactly like the count() it replaces); the
-            # scheduled/proc aggs read caches the fused job above already
-            # materialized. Running the four small aggs concurrently folds
-            # the whole counters wall into the materialization window. Keys
-            # never collide across the two status frames (settled statuses ≠
-            # 'pending').
-            s_fut = early_pool.submit(
+        with ThreadPoolExecutor(max_workers=4) as pool:
+            s_fut = pool.submit(
                 lambda: settled_delta.groupBy("status", "round").agg(F.count(F.lit(1)).alias("n")).collect()
             )
-            p_fut = early_pool.submit(
+            p_fut = pool.submit(
                 lambda: pending_new.groupBy("status", "round").agg(F.count(F.lit(1)).alias("n")).collect()
             )
-            shard_fut = early_pool.submit(
+            shard_fut = pool.submit(
                 lambda: scheduled.groupBy(
                     urlseen.shard_of(F.col("url_hash"), self.n_shards).alias("shard_id")
                 ).agg(F.count(F.lit(1)).alias("n")).collect()
             )
-            docs_fut = early_pool.submit(
+            docs_fut = pool.submit(
                 lambda: proc.groupBy(F.col("doc.skip_reason").alias("reason"))
                 .agg(F.count(F.lit(1)).alias("n")).collect()
             )
@@ -498,10 +469,7 @@ class FrontierEngine:
                 ({"shard_id": int(r["shard_id"]), "scheduled": r["n"]} for r in shard_fut.result()),
                 key=lambda d: d["shard_id"],
             )
-            _t = _mark("counters_lineage_job", _t)
-            # join the overlapped writes before the commit point; a failed
-            # early write raises here and aborts
-            prewritten = {name: (fut.result(), True) for name, fut in early_futs.items()}
+        _t = _mark("counters_lineage_job", _t)
 
         n_fetched = status_counts.get(("fetched", round_no), 0)
         n_missing = status_counts.get(("missing", round_no), 0)
@@ -530,23 +498,15 @@ class FrontierEngine:
         if n_leftover != counters["skipped_budget"]:
             raise RuntimeError(f"round {round_no}: {n_leftover} pending rows left over, "
                                f"counters say skipped_budget={counters['skipped_budget']}")
-        # Delta sizing uses the EXACT per-frame counts the fused counters
-        # job just computed — not the n_pending_in upper bound, which for
-        # the budget-bounded frames (schedule: ≤ budget × hosts; known
-        # delta: discovered_new) is orders of magnitude too high and
-        # saturated the coalesce target at n_part, emitting n_part
-        # near-empty files per round.
         n_settled = n_scheduled + n_blocked
-        tables = {
-            # sized views over the ALREADY-MATERIALIZED caches (the
-            # counters job ran first): coalesce here merges cached
-            # partitions for the write — no recompute, no serialized
-            # upstream chain
-            "frontier_pending": _sized(pending_new, counters["pending_out"]),
-            "known_shards": new_known_shards,
-        }
         self.store.commit(
-            tables=tables,
+            # sized views over the ALREADY-MATERIALIZED caches (the counters
+            # job ran first): coalesce here merges cached partitions for the
+            # write — no recompute, no serialized upstream chain
+            tables={
+                "frontier_pending": _sized(pending_new, counters["pending_out"]),
+                "known_shards": new_known_shards,
+            },
             append_tables={
                 "frontier_log": _sized(settled_delta, n_settled),
                 # new-round rows carry round == round_no+1 (leftover keeps
@@ -565,12 +525,25 @@ class FrontierEngine:
                     ),
                     n_scheduled,
                 ),
+                # write-only projections of the proc cache: coalesce merges
+                # cached partitions, no recompute; coalesce BEFORE
+                # sortWithinPartitions keeps the sink's per-partition order.
+                # Their rows are WIDE (payload carries body + full_body, ~tens
+                # of KB/row), so the target is byte-informed: 64k wide rows
+                # in one file is a ~GB single-task parquet encode that
+                # serializes the commit (measured 81 s at local[4]); 8k
+                # rows/file lands in the 100-250 MB lake sweet spot.
+                "meta_docs": _sized(
+                    pipeline.meta_docs(proc), n_docs_ok, rows_per_part=16384
+                ).sortWithinPartitions("idx_id"),
+                "payload_docs": _sized(
+                    pipeline.payload_docs(proc), n_docs_ok, rows_per_part=8192
+                ).sortWithinPartitions("idx_id"),
             },
             carry_tables=["robots"],
             counters=counters,
             lineage=lineage,
             note=f"round-{round_no}",
-            prewritten=prewritten,
         )
         _mark("commit_writes", _t)
         if timing_on:

@@ -10,7 +10,8 @@ It replaces the reference's Redis split-range resume cache
 (warcio.py:120-134,172-174): instead of per-split "start:end" records, a
 killed job re-reads the **last committed snapshot** and recomputes nothing.
 
-Commit protocol (single-writer, crash-safe):
+Commit protocol (single-writer, crash-safe; ``commit`` is the only writer
+of a snapshot's tables):
   1. write each table's parquet under  data/<table>/snap-<id>/   (Spark
      writer; _SUCCESS marker closes the files),
   2. write  metadata/snap-<id>.json.tmp  (tables, counters, lineage, parent)
@@ -25,6 +26,7 @@ from __future__ import annotations
 import json
 import os
 import time
+from concurrent.futures import ThreadPoolExecutor
 from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
@@ -145,24 +147,17 @@ class IceLite:
 
     # ------------------------------------------------------------ commits
 
-    def next_snapshot_id(self) -> int:
-        """Id the NEXT commit will use (single-writer contract). Lets a
-        caller start independent table writes concurrently with its own
-        remaining compute and hand the finished paths to ``commit`` via
-        ``prewritten`` (guide §2.6 job overlap); a crash before the commit
-        point leaves them as inert orphans, exactly like an aborted
-        commit's own writes."""
-        cur = self.current_snapshot_id()
-        return 0 if cur is None else cur + 1
-
-    def _write_dataset(self, df: DataFrame, path: str) -> None:
-        """Write one table dir (orphan-guarded, errorifexists). snap ids
-        are strictly newer than every COMMITTED snapshot, so an existing
-        dir at this path can only be an orphan from a crash between data
-        writes and the current.json commit point. Atomically RENAME it
-        aside before deleting: a contract-violating concurrent same-id
-        writer then still fails loudly on its own errorifexists write
-        (whoever wins the rename removes only the dir it renamed)."""
+    def write_table(self, name: str, df: DataFrame, snap_id: int) -> str:
+        """Write table ``name`` of snapshot ``snap_id`` (orphan-guarded,
+        errorifexists) and return its dir. ``commit`` writes every table of
+        a snapshot through here. snap ids are strictly newer than every
+        COMMITTED snapshot, so an existing dir at this path can only be an
+        orphan from a crash between data writes and the current.json commit
+        point. Atomically RENAME it aside before deleting: a
+        contract-violating concurrent same-id writer then still fails loudly
+        on its own errorifexists write (whoever wins the rename removes only
+        the dir it renamed)."""
+        path = os.path.join(self.root, "data", name, f"snap-{snap_id}")
         if os.path.exists(path):
             import shutil
 
@@ -174,13 +169,6 @@ class IceLite:
             else:
                 shutil.rmtree(orphan, ignore_errors=True)
         df.write.mode("errorifexists").parquet(path)
-
-    def write_table(self, name: str, df: DataFrame, snap_id: int) -> str:
-        """Eagerly write ``name`` for the upcoming snapshot ``snap_id``
-        (from ``next_snapshot_id``); pass the returned path to ``commit``'s
-        ``prewritten``. The write happens NOW, on the caller's thread."""
-        path = os.path.join(self.root, "data", name, f"snap-{snap_id}")
-        self._write_dataset(df, path)
         return path
 
     def commit(
@@ -191,9 +179,9 @@ class IceLite:
         carry_tables: Optional[list[str]] = None,
         append_tables: Optional[dict[str, DataFrame]] = None,
         note: str = "",
-        prewritten: Optional[dict[str, tuple[str, bool]]] = None,
     ) -> int:
-        """Atomically commit a new snapshot.
+        """Atomically commit a new snapshot; writes every table of ``tables``
+        and ``append_tables`` through ``write_table``.
 
         ``tables``        — DataFrames replacing the table in this snapshot.
         ``append_tables`` — DataFrames appended: the manifest entry becomes
@@ -203,63 +191,29 @@ class IceLite:
                             (manifest points at the parent's files; no IO).
         ``counters``      — round metrics (fetched/skipped/dup…, north_rule).
         ``lineage``       — per-partition provenance rows.
-        ``prewritten``    — table → (path, is_append) already written via
-                            ``write_table`` for ``next_snapshot_id()``
-                            (overlapped with the caller's other compute);
-                            manifested exactly like this commit's own
-                            writes, stats included.
         """
         parent = self.current_snapshot_id()
         snap_id = 0 if parent is None else parent + 1
-        for name, (path, _a) in (prewritten or {}).items():
-            # single-writer contract: prewrites must target THIS snapshot
-            if os.path.basename(path) != f"snap-{snap_id}":
-                raise RuntimeError(
-                    f"prewritten {name} targets {path}, commit is snap-{snap_id}"
-                )
         parent_tables = self.snapshot(parent)["tables"] if parent is not None else {}
         manifest_tables: dict[str, str | list] = {}
         for t in carry_tables or []:
             if t in parent_tables:
                 manifest_tables[t] = parent_tables[t]
 
-        # The table writes are independent Spark jobs; submit them from a
-        # thread pool so the scheduler overlaps them (FAIR across jobs is
-        # irrelevant in local mode — what matters is that small writes don't
-        # serialize their fixed per-job latency). Failure of any write aborts
-        # the commit before the commit point, leaving orphan files inert.
-        jobs: list[tuple[str, DataFrame, str, bool]] = []
-        for name, df in tables.items():
-            jobs.append((name, df, os.path.join(self.root, "data", name, f"snap-{snap_id}"), False))
-        for name, df in (append_tables or {}).items():
-            jobs.append((name, df, os.path.join(self.root, "data", name, f"snap-{snap_id}"), True))
-
-        def _write(job):
-            _, df, path, _ = job
-            self._write_dataset(df, path)
-
-        if len(jobs) > 1:
-            from concurrent.futures import ThreadPoolExecutor
-
-            # All writes in flight at once (was 4): per-table commit
-            # attribution showed the writes are LATENCY-bound chains of
-            # small stages, not throughput-bound — executors sit idle while
-            # 4-at-a-time jobs serialize their fixed DAG/scheduling
-            # latencies (measured: commit 33 s at 16 one-core executors
-            # with sum-of-walls 110 s). The cluster scheduler is the right
-            # arbiter of genuinely contended executors.
-            with ThreadPoolExecutor(max_workers=min(12, len(jobs))) as pool:
-                list(pool.map(_write, jobs))
-        else:
-            for job in jobs:
-                _write(job)
-        # prewritten tables join the manifest/stats path as zero-work jobs
-        jobs = jobs + [
-            (name, None, path, is_append)
-            for name, (path, is_append) in (prewritten or {}).items()
-        ]
-        for name, _, path, is_append in jobs:
-            if is_append:
+        # The table writes are independent Spark jobs; submit them all at
+        # once from a thread pool so the scheduler overlaps them: the writes
+        # are LATENCY-bound chains of small stages, and writing them a few
+        # at a time serialized their fixed DAG/scheduling latencies
+        # (measured: commit 33 s at 16 one-core executors with sum-of-walls
+        # 110 s). Failure of any write aborts the commit before the commit
+        # point, leaving orphan files inert.
+        appends = append_tables or {}
+        jobs = {**tables, **appends}
+        with ThreadPoolExecutor(max_workers=min(12, max(1, len(jobs)))) as pool:
+            futs = {name: pool.submit(self.write_table, name, df, snap_id) for name, df in jobs.items()}
+        written = {name: fut.result() for name, fut in futs.items()}
+        for name, path in written.items():
+            if name in appends:
                 prev = parent_tables.get(name, [])
                 prev = prev if isinstance(prev, list) else [prev]
                 manifest_tables[name] = prev + [path]
@@ -292,9 +246,8 @@ class IceLite:
             if manifest_tables.get(name) is None:
                 continue
             carried = stats.setdefault(name, {})
-            for jname, _, path, _ in jobs:
-                if jname == name:
-                    carried.update(_collect_file_stats(path, col))
+            if name in written:
+                carried.update(_collect_file_stats(written[name], col))
         manifest = {
             "id": snap_id,
             "parent": parent,

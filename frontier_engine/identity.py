@@ -11,10 +11,11 @@ Semantics studied from /root/reference/warc_indexer/indexer/process.py:
 - ``clip_warc_date``— process.py:377-389 (clamp out-of-range day-of-month).
 - ``ws_collapse``   — process.py:392-397.
 
-All kernels are pure Python on scalars plus vectorized pandas wrappers
-(``*_series``) used by the Arrow UDFs in :mod:`frontier_engine.udfs` —
-the same code path serves the single-node oracle and the Spark pipeline,
-which is what makes the byte-identity tests meaningful.
+All kernels are pure Python on scalars, called per row inside the Arrow
+UDFs of :mod:`frontier_engine.pipeline` and :mod:`frontier_engine.frontier`
+(``clip_warc_date_series`` is the one vectorized pandas wrapper) — the same
+code path serves the single-node oracle and the Spark pipeline, which is
+what makes the byte-identity tests meaningful.
 """
 
 from __future__ import annotations
@@ -97,23 +98,6 @@ def ws_collapse(text: str) -> str:
 
 
 # ---------------------------------------------------------------- vectorized
-
-def webis_uuid_series(prefix: str, ids: pd.Series) -> pd.Series:
-    return ids.map(lambda i: webis_uuid(prefix, i))
-
-
-def index_uuid_series(
-    unix_time_ms: pd.Series, stream_pos: pd.Series, source_name: pd.Series, doc_id: pd.Series
-) -> pd.Series:
-    return pd.Series(
-        [
-            index_uuid(t, p, n, d)
-            for t, p, n, d in zip(unix_time_ms, stream_pos, source_name, doc_id)
-        ],
-        index=doc_id.index,
-        dtype="object",
-    )
-
 
 def clip_warc_date_series(dates: pd.Series) -> pd.Series:
     return dates.map(clip_warc_date)

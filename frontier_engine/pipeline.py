@@ -23,7 +23,6 @@ frontier-only queries that never touch it.
 
 from __future__ import annotations
 
-import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F, types as T
 from pyspark.sql.window import Window
@@ -161,7 +160,7 @@ def make_process_udf(id_prefix: str, max_payload_size: int = oracle.MAX_DOCUMENT
     def _process(urls: pd.Series, ts_ms: pd.Series, htmls: pd.Series) -> pd.DataFrame:
         # vectorized ts conversion once per Arrow batch (per-row pd.Timestamp
         # construction costs more than the date math itself)
-        ts_objs = np.array(pd.to_datetime(ts_ms, unit="ms", utc=True).dt.to_pydatetime())
+        ts_objs = pd.DatetimeIndex(pd.to_datetime(ts_ms, unit="ms", utc=True)).to_pydatetime()
         cols: dict[str, list] = {f.name: [] for f in DOC_SCHEMA.fields}
         ap_idx = cols["idx_id"].append
         ap_skip = cols["skip_reason"].append

@@ -88,11 +88,7 @@ def get_spark(
         # 1024 measured optimal for the heavy extraction UDF at high
         # parallelism (finer JVM↔python pipelining): local[16] stage
         # throughput 2.5k→3.1k pages/s vs the 10k default; neutral at local[4].
-        # Env-overridable so A/B sweeps are a pure env flip, no code edit.
-        .config(
-            "spark.sql.execution.arrow.maxRecordsPerBatch",
-            os.environ.get("FRONTIER_ARROW_BATCH", "1024"),
-        )
+        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "1024")
         # cap batch BYTES too (default 64m): with ~30 KB html rows a
         # 1024-row batch is ~30 MB — far beyond the ~19 MB the loopback
         # socket pair buffers, which is the precondition for the rare
@@ -100,10 +96,7 @@ def get_spark(
         # BENCH/BASELINE.md (r3 notes). 8 MB keeps any single in-flight
         # batch inside kernel buffering; small-row workloads still hit
         # the 1024-row cap first, so their batching is unchanged
-        .config(
-            "spark.sql.execution.arrow.maxBytesPerBatch",
-            os.environ.get("FRONTIER_ARROW_MAX_BYTES", "8m"),
-        )
+        .config("spark.sql.execution.arrow.maxBytesPerBatch", "8m")
         .config("spark.ui.enabled", "false")
         .config("spark.sql.parquet.compression.codec", "zstd")
         .config("spark.local.dir", _local_dir())

@@ -318,9 +318,11 @@ class TestFrontierRounds:
         assert eng.store.current_snapshot_id() == sid
 
     def test_failed_write_aborts_round_and_retry_matches(self, spark, tmp_path, run3, crawl_inputs):
-        """A raising table write fails the round before its commit point,
-        shuts down the round's thread pool, and a retry commits the same
-        counters as a clean run."""
+        """A table write raising inside ``IceLite.commit``'s pool fails the
+        round before its commit point: no thread pool outlives it, no
+        manifest is written, and a retry commits the same counters as a
+        clean run."""
+        import os
         import threading
 
         _, seeds, robots, pages_prepared = crawl_inputs
@@ -344,6 +346,9 @@ class TestFrontierRounds:
         ]
         assert not leaked, leaked
         assert eng.store.current_snapshot_id() == sid
+        assert sorted(os.listdir(os.path.join(eng.store.root, "metadata"))) == [
+            "current.json", f"snap-{sid}.json",
+        ]
         eng.store.write_table = real_write
         assert eng.run_round(pages_prepared) == run3[1][0]
 
@@ -397,21 +402,27 @@ class TestResumeDeterminism:
             lists.append(_schedule_list(eng))
         assert lists[0] == lists[1]
 
-    def test_sigkill_mid_commit_resumes_previous_snapshot(self, spark, tmp_path, crawl_inputs):
+    @pytest.mark.parametrize("gates_at_zero", [False, True], ids=["default_gates", "gates_at_zero"])
+    def test_sigkill_mid_commit_resumes_previous_snapshot(self, spark, tmp_path, crawl_inputs,
+                                                          round_paths, gates_at_zero):
         """Chaos gate (VERDICT r3 item 7): SIGKILL BETWEEN a round-commit's
-        parquet/manifest writes and the current.json rename (the commit
-        point, icelite.py:148-151). The store must read back the PREVIOUS
-        snapshot, the aborted snapshot's orphan files must be inert (and
-        not block the re-commit of the same snapshot id), and the resumed
-        crawl must match an uninterrupted control byte-for-byte."""
+        parquet/manifest writes (all seven round tables) and the
+        current.json rename (the commit point). The store must read back
+        the PREVIOUS snapshot, the aborted snapshot's orphan files must be
+        inert (and not block the re-commit of the same snapshot id), and the
+        resumed crawl must match an uninterrupted control byte-for-byte.
+        Runs with the default row gates and with both gates at 0 (bloom
+        known-set filter and shuffle fetch join in every round)."""
+        import os
         import signal
         import subprocess
         import sys
 
+        root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
         store = str(tmp_path / "chaos")
         code = f"""
 import json, os, signal, sys
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, {root!r})
 real_rename = os.rename
 def hook(src, dst):
     # kill exactly when snapshot 2's commit point is about to land —
@@ -423,8 +434,15 @@ def hook(src, dst):
     real_rename(src, dst)
 os.rename = hook
 from frontier_engine.session import get_spark
-from frontier_engine import pipeline, synth
+from frontier_engine import frontier, pipeline, synth, urlseen
 from frontier_engine.frontier import FrontierEngine
+if {gates_at_zero!r}:
+    frontier._KNOWN_BROADCAST_ROWS = frontier._FETCH_BROADCAST_ROWS = 0
+real_filter = urlseen.filter_unseen
+def filter_spy(*a, **k):
+    print("BLOOM_FILTER", flush=True)
+    return real_filter(*a, **k)
+urlseen.filter_unseen = filter_spy
 spark = get_spark(cores=4, driver_memory="4g", app="chaos")
 pdf = synth.generate_pages(n_pages=300, seed=42, n_hosts=40)
 pages = spark.createDataFrame(pdf)
@@ -443,19 +461,29 @@ print("UNREACHABLE")
             out.returncode, out.stdout[-500:], out.stderr[-1500:],
         )
         assert "UNREACHABLE" not in out.stdout
+        # the killed process took the forced path in both of its rounds
+        assert out.stdout.count("BLOOM_FILTER") == (2 if gates_at_zero else 0), out.stdout[-500:]
 
         from frontier_engine.icelite import IceLite
 
         assert IceLite(store).current_snapshot_id() == 1  # snap 2 never landed
 
         _, seeds, robots, pages_prepared = crawl_inputs
-        eng_res = FrontierEngine(spark, store, n_shards=8, bloom_bits=1 << 16, budget=5)
-        assert eng_res.initialized()
-        eng_res.run_round(pages_prepared)  # re-does the killed round 2
-        eng_res.run_round(pages_prepared)
+        with pytest.MonkeyPatch.context() as mp:
+            if gates_at_zero:
+                mp.setattr(frontier, "_KNOWN_BROADCAST_ROWS", 0)
+                mp.setattr(frontier, "_FETCH_BROADCAST_ROWS", 0)
+            bloom_calls, fetch_hints = round_paths(mp)
+            eng_res = FrontierEngine(spark, store, n_shards=8, bloom_bits=1 << 16, budget=5)
+            assert eng_res.initialized()
+            eng_res.run_round(pages_prepared)  # re-does the killed round 2
+            eng_res.run_round(pages_prepared)
 
-        eng_ctl = _mk_engine(spark, tmp_path, "chaos_control")
-        eng_ctl.init(seeds, robots)
-        for _ in range(3):
-            eng_ctl.run_round(pages_prepared)
+            eng_ctl = _mk_engine(spark, tmp_path, "chaos_control")
+            eng_ctl.init(seeds, robots)
+            for _ in range(3):
+                eng_ctl.run_round(pages_prepared)
+        # 2 resumed + 3 control rounds
+        assert len(bloom_calls) == (5 if gates_at_zero else 0)
+        assert fetch_hints == [not gates_at_zero] * 5
         assert _schedule_list(eng_res) == _schedule_list(eng_ctl)

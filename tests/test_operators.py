@@ -245,20 +245,6 @@ class TestIceLite:
         assert store.current_snapshot_id() == 0
         assert store.read(spark, "t").count() == 3
 
-    def test_prewrite_for_other_snapshot_raises(self, spark, tmp_path):
-        """A prewritten path must belong to the snapshot being committed;
-        a mismatch raises (not an assert, so ``python -O`` keeps it) and
-        writes no manifest."""
-        store = IceLite(str(tmp_path / "t"))
-        store.commit({"a": spark.range(3)})
-        wrong = store.write_table("b", spark.range(2), store.next_snapshot_id() + 1)
-        with pytest.raises(RuntimeError, match="snap-1"):
-            store.commit({}, prewritten={"b": (wrong, False)})
-        assert store.current_snapshot_id() == 0
-        assert sorted(os.listdir(os.path.join(store.root, "metadata"))) == [
-            "current.json", "snap-0.json",
-        ]
-
 
 class TestMaintenanceAndPartitioning:
     def test_ensure_table(self, spark, tmp_path):

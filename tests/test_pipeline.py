@@ -173,3 +173,20 @@ def test_meta_docs_surface_header_maps(spark, pages_df):
     row = meta.where(F.col("http_date").isNotNull()).first()
     assert row.warc_headers == {"warc_ip_address": "9.9.9.9"}
     assert row.http_date == "2024-01-01T00:00:00Z"
+
+
+def test_process_udf_batch_raises_no_future_warning(spark, pages_pdf):
+    """The extraction UDF's Arrow-batch body converts timestamps without a
+    pandas FutureWarning (one per batch per worker otherwise) and yields the
+    oracle's doc ids."""
+    import warnings
+
+    rows = pages_pdf.head(8)
+    ts_ms = rows["warc_ts"].astype("int64") // 1_000_000
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", FutureWarning)
+        out = pipeline.make_process_udf("synth").func(rows["url"], ts_ms, rows["html"])
+    assert list(out["idx_id"]) == [
+        oracle.process_page(r.url, r.warc_ts.to_pydatetime(), bytes(r.html)).idx_id
+        for r in rows.itertuples()
+    ]

@@ -4,12 +4,16 @@ plumbing, and similarity search."""
 from __future__ import annotations
 
 import math
+import os
 
 import pytest
 from pyspark.sql import functions as F
 
 from frontier_engine import analyzers, multimodal, simsearch, streaming, warc_source
 from frontier_engine.icelite import IceLite, merge_upsert
+
+# subprocess tests import the engine from this checkout, wherever it lives
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 # ---------------------------------------------------------------- warc
@@ -141,7 +145,7 @@ class TestStreaming:
         ck = str(tmp_path / "chaos_ck")
         code = f"""
 import os, signal, sys
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, {ROOT!r})
 import frontier_engine.icelite as IL
 real_commit = IL.IceLite.commit
 def hook(self, *a, **k):
@@ -510,7 +514,7 @@ class TestWarcSplitRead:
 
         code = f"""
 import resource, sys
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, {ROOT!r})
 from frontier_engine import warc_source
 base = resource.getrusage(resource.RUSAGE_SELF).ru_maxrss  # import overhead
 with open({str(path)!r}, "rb") as f:
@@ -603,7 +607,7 @@ print(resource.getrusage(resource.RUSAGE_SELF).ru_maxrss)
 
         code = f"""
 import resource, sys
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, {ROOT!r})
 from frontier_engine import warc_source
 base = resource.getrusage(resource.RUSAGE_SELF).ru_maxrss
 with open({str(path)!r}, "rb") as f:

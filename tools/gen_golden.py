@@ -1,5 +1,6 @@
-import json, hashlib, sys, tempfile
-sys.path.insert(0, '/root/repo')
+import json, hashlib, os, sys, tempfile
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 from frontier_engine.session import get_spark
 from frontier_engine import synth, pipeline
 from frontier_engine.frontier import FrontierEngine
@@ -29,7 +30,7 @@ golden = {
     'schedule': sched,
     'payload_hashes': pl,
 }
-with open('/root/repo/tests/golden/crawl_golden.json', 'w') as f:
+with open(os.path.join(ROOT, 'tests', 'golden', 'crawl_golden.json'), 'w') as f:
     json.dump(golden, f, indent=1)
 print('golden rows:', len(sched), 'payload:', len(pl))
 spark.stop()

@@ -12,10 +12,12 @@ Usage: python tools/plan_audit.py [sf_dir]
 from __future__ import annotations
 
 import io
+import os
 import sys
 from contextlib import redirect_stdout
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 AUDITED = {
     "scan_filter_project": "filter pushdown + column pruning reach the parquet scan",
@@ -55,7 +57,7 @@ def main() -> None:
         with redirect_stdout(buf):
             df.explain("formatted")
         out.append(f"## {name}\n\n_{why}_\n\n```\n{buf.getvalue().rstrip()}\n```\n")
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(os.path.join(ROOT, "PLANS.md"), "w") as f:
         f.write("\n".join(out))
     print(f"wrote PLANS.md ({len(AUDITED)} plans)")
 
