@@ -648,16 +648,6 @@ def fold_sql(col: str) -> str:
     return f"translate({multi}, {_sq(_FOLD_SRC)}, {_sq(_FOLD_DST)})"
 
 
-def stem_sql(col: str, lang: str) -> str:
-    """Single-expression stemmer for one language (portable SQL). Multi-step
-    languages (ru/hu/fi) have no single-expression form — naive composition
-    would inline each step's text into the next, exploding exponentially —
-    use `stem_step_fns` and apply the steps in sequence."""
-    if lang in EXACT_STEM_SQL:
-        return EXACT_STEM_SQL[lang](col)
-    raise ValueError(f"{lang} is a multi-step stemmer; use stem_step_fns({lang!r})")
-
-
 def stem_step_fns(lang: str) -> list:
     """Ordered stem step generators for `lang`, each fn(col_name) -> SQL.
     Single-pass languages return one step."""
@@ -835,18 +825,6 @@ def _scored(tf: DataFrame, dl: DataFrame, ts: DataFrame, term_score, out: str) -
     )
 
 
-def lm_jelinek_mercer_scores(docs, query_terms, id_col="doc_id", text_col="text",
-                             lam: float = 0.1) -> DataFrame:
-    """LMJelinekMercer (Lucene): Σ_t ln(1 + ((1-λ)·tf/dl) / (λ·ttf/total))."""
-    tf, dl, ts, _, _, total = _term_stats(docs, query_terms, id_col, text_col)
-    s = F.log(
-        F.lit(1.0)
-        + ((1 - lam) * F.col("tf") / F.col("dl"))
-        / (F.lit(lam) * F.col("ttf") / F.lit(float(total)))
-    )
-    return _scored(tf, dl, ts, s, "lmj")
-
-
 def lmj_lmd_scores(docs, query_terms, id_col="doc_id", text_col="text",
                    lam: float = 0.1, mu: float = 2000.0) -> DataFrame:
     """LMJelinekMercer + LMDirichlet in ONE pass (the dfi_ib fusion
@@ -893,29 +871,6 @@ def dfr_glh2_scores(docs, query_terms, id_col="doc_id", text_col="text",
     gain = F.log2(F.lit(1.0) + lam) + tfn * F.log2((F.lit(1.0) + lam) / lam)
     s = gain / (F.lit(1.0) + tfn)
     return _scored(tf, dl, ts, s, "dfr")
-
-
-def dfi_chisquared_scores(docs, query_terms, id_col="doc_id", text_col="text") -> DataFrame:
-    """DFI independence_measure=chisquared (Lucene DFISimilarity):
-      expected = ttf·dl/total;  score = log2(1 + (tf-expected)²/expected)
-      and 0 where tf ≤ expected (only surprising co-occurrence scores)."""
-    tf, dl, ts, _, _, total = _term_stats(docs, query_terms, id_col, text_col)
-    expected = F.col("ttf") * F.col("dl") / F.lit(float(total))
-    chi2 = (F.col("tf") - expected) * (F.col("tf") - expected) / expected
-    s = F.when(F.col("tf") > expected, F.log2(F.lit(1.0) + chi2)).otherwise(F.lit(0.0))
-    return _scored(tf, dl, ts, s, "dfi")
-
-
-def ib_spl_scores(docs, query_terms, id_col="doc_id", text_col="text",
-                  c: float = 1.0) -> DataFrame:
-    """IB distribution=spl, lambda=ttf, normalization=h2 (Lucene IB):
-      λ = (ttf+1)/(N+1);  tfn = tf·log2(1 + c·avgdl/dl)
-      score = -log2( (λ^(tfn/(tfn+1)) - λ) / (1-λ) )"""
-    tf, dl, ts, n_docs, avgdl, _ = _term_stats(docs, query_terms, id_col, text_col)
-    lam = (F.col("ttf") + 1) / F.lit(float(n_docs) + 1.0)
-    tfn = F.col("tf") * F.log2(F.lit(1.0) + F.lit(c * avgdl) / F.col("dl"))
-    s = -F.log2((F.pow(lam, tfn / (tfn + 1)) - lam) / (F.lit(1.0) - lam))
-    return _scored(tf, dl, ts, s, "ib")
 
 
 def dfi_ib_scores(docs, query_terms, id_col="doc_id", text_col="text",

@@ -4,7 +4,7 @@ Each round (north_rule pipeline):
 
   pending candidates ──canonicalized at ingest, admitted once──▶
     1. membership        none at round start: pending is never re-filtered
-    2. robots gate       broadcast join + rule kernel     (politeness.py)
+    2. robots gate       broadcast join + rule kernel, once (politeness.py)
     3. schedule          per-host PQ, budget-capped        (politeness.py)
     4. "fetch"           equi join against the pages table (keep-newest)
     5. process           extraction pipeline               (pipeline.py)
@@ -33,6 +33,16 @@ State layout (write volume ∝ round delta, never ∝ crawl size):
                               the URL-seen set (8 B/row)
   known_shards      REPLACED  bloom shards over frontier_known (urlseen.py)
 A full historical frontier view is ``frontier_table()`` = pending ∪ log.
+
+Round caches (each step above runs once; ``run_round`` unpersists all five
+when the round ends, whether it commits or raises):
+  gated          pending + robots verdict; the allowed and blocked branches
+                 both read it, so the rule kernel sees each row once
+  scheduled      the scheduled rows only (fetch, missing, lineage, schedule)
+  proc           extracted docs without html; the docs_ok aggregation
+                 materializes it
+  settled_delta  this round's fetched/missing/blocked rows
+  pending_new    leftover (allowed, not scheduled) ∪ newly admitted URLs
 
 Determinism: candidate identity is idx_id = index_uuid(round-millis,
 url-derived offset, url-derived source file, webis_uuid(url_norm)) — the
@@ -237,321 +247,333 @@ class FrontierEngine:
         # 1. membership: none needed here. A URL enters pending only through
         # the anti join against frontier_known (step 6) and leaves it when it
         # settles, so pending never holds a URL that was already scheduled.
-        pending = self._read("frontier_pending").persist()
+        pending = self._read("frontier_pending")
         known = self._read("frontier_known")
         known_shards = self._read("known_shards")
         robots = self._read("robots")
 
-        # 2. robots gate
-        gated = politeness.apply_robots_gate(pending, robots)
-        allowed = gated.where(F.col("robots_allowed"))
-        blocked = gated.where(~F.col("robots_allowed"))
+        # every cache the round persists, freed on success and on error
+        caches: list[DataFrame] = []
 
-        # 3. per-host PQ schedule
-        sched_all = politeness.schedule_hosts(allowed, budget=self.budget, round_seconds=round_seconds).persist()
-        scheduled = sched_all.where(F.col("scheduled"))
+        def _cache(df: DataFrame) -> DataFrame:
+            df = df.persist()
+            caches.append(df)
+            return df
 
-        # 4. fetch: equi join on url_norm against keep-newest pages. The
-        # scheduled side is budget-bounded (≤ budget × hosts rows of a few
-        # small columns) — broadcast it so the html-heavy pages side NEVER
-        # shuffles: it streams straight from its cached partitions. The
-        # broadcast is CONDITIONAL, decided from the PARENT SNAPSHOT's
-        # pending_out counter (scheduled ⊆ pending, so pending_in is a free
-        # upper bound — no count() job, no extra round barrier): above
-        # ``_FETCH_BROADCAST_ROWS`` candidate rows the hint could exceed
-        # driver/broadcast limits, so fall back to a shuffle join and let
-        # AQE pick the strategy.
-        fetch_cols = ["url_norm", "url_hash", "host", "priority", "idx_id", "seq"]
-        sched_small = scheduled.select(*fetch_cols)
-        use_broadcast = n_pending_in <= _FETCH_BROADCAST_ROWS
-        if not use_broadcast:
-            # pending_in is only an upper bound and the schedule is budget-
-            # bounded: one count() on its cache decides precisely
-            use_broadcast = scheduled.count() <= _FETCH_BROADCAST_ROWS
-        if use_broadcast:
-            sched_small = F.broadcast(sched_small)
-        # NOT persisted: ``html`` flows through this frame exactly once, into
-        # the extraction UDF. Caching it here paid a second columnar encode
-        # of every fetched page's html per round — pure memory-subsystem
-        # traffic (the scarce resource at both 100 TB and on this host).
-        # Fetched-key reuses (status marks, missing anti join) read the
-        # html-free ``proc`` cache below instead.
-        fetched_rows = sched_small.join(
-            pages_prepared.select("url_norm", "url", "warc_ts", "html"), "url_norm", "inner"
-        )
+        try:
+            # 2. robots gate, cached: both branches below read its output, so
+            # the rule kernel runs once per pending row
+            gated = _cache(politeness.apply_robots_gate(pending, robots))
+            allowed = gated.where(F.col("robots_allowed"))
+            blocked = gated.where(~F.col("robots_allowed"))
 
-        import time as _time
-
-        timing_on = os.environ.get("FRONTIER_TIMING")
-        phases: dict[str, float] = {}
-
-        def _mark(name: str, t0: float) -> float:
-            t = _time.perf_counter()
-            phases[name] = round(t - t0, 2)
-            return t
-
-        _t = _time.perf_counter()
-
-        # 5. process fetched pages (extraction pipeline; idx_id from page
-        # identity). In the broadcast-fetch regime the join output inherits
-        # the pages scan/cache partitioning — hash-random in url space, so
-        # host-skew-free by construction — and scan, broadcast probe and
-        # extraction UDF fuse into ONE stage with no shuffle touching html.
-        # The shuffle-join fallback partitions by hash(url_norm), equally
-        # host-skew-free, so the extraction UDF reads the join output as is
-        # (html crosses one exchange, never two; plan-tested).
-        # ``html`` is dropped BEFORE the persist: downstream consumers
-        # (marks, links, counters, meta/payload projections) never read it,
-        # so caching it would pay a columnar encode per round for bytes
-        # nobody decodes — and proc is the ONLY per-round cache of fetched
-        # pages (the join output itself is deliberately unpersisted above).
-        n_part = spark.sparkContext.defaultParallelism * 2
-        proc = pipeline.processed(fetched_rows, id_prefix=self.id_prefix).drop("html").persist()
-        # materialize the extraction cache BEFORE the fused counters job:
-        # its tagged-union branches (new_frontier via discovered links, and
-        # the docs branch) both read proc, and concurrent branches of one
-        # job would otherwise compute the heavy UDF twice in parallel.
-        proc.count()
-        _t = _mark("schedule_fetch_extract", _t)
-        missing = scheduled.select("url_norm", "url_hash", "host", "priority", "idx_id").join(
-            proc.select("url_norm"), "url_norm", "left_anti"
-        )
-
-        # Counter-driven partition sizing for round-delta WRITES: every
-        # written frame is sized from the EXACT row count the counters job
-        # below computes (no count() job). The deltas are unions/projections
-        # of upstream caches and would otherwise inherit the SUM of their
-        # parents' partition counts — dozens of near-empty parquet files per
-        # commit, a fixed per-round cost that caps small-round scaling.
-        #
-        # CRITICAL placement rule, measured the hard way: coalesce ONLY on
-        # the write side of a persist boundary (or on pure projections of
-        # a cache), never upstream of real compute. coalesce() propagates
-        # through narrow chains, and when AQE broadcasts the small side of
-        # an anti join the whole chain above it becomes narrow — a
-        # pre-persist coalesce(1) then serializes the anti join, the cache
-        # scans, even the link-canonicalize Arrow UDF into one task
-        # (measured: 10-16 s fused counters job degrading to 62-86 s,
-        # intermittent with AQE's runtime broadcast decision). At 10^10
-        # round sizes the same formula yields ≥ cluster parallelism, so
-        # the write files stay right-sized either way.
-        def _sized(df: DataFrame, est_rows: int, rows_per_part: int = 65536) -> DataFrame:
-            # CONTRACT: call only on persisted-and-materialized frames or
-            # pure projections of them. df.rdd below compiles a physical
-            # plan (and under AQE can eagerly materialize shuffle stages);
-            # it is cheap here only because every input is a narrow view of
-            # an already-materialized cache (ADVICE r5).
-            target = int(min(max(1, est_rows // rows_per_part + 1), n_part))
-            # coalesce merges by PULLING sibling partitions into the
-            # surviving tasks — on multi-JVM executors that is remote
-            # block fetch of the whole frame. Worth it when it collapses
-            # dozens of near-empty files into a few; NOT worth it when the
-            # frame already sits near the target (measured: the payload
-            # write's 15→12 merge cost 15.2 s at 16 one-core executors vs
-            # 6.9 s at 4 — cross-executor traffic for a 20 % file-count
-            # trim). Skip unless the merge at least halves the file count
-            # (tiny rounds: any cur ≥ 2 with target 1 still collapses to
-            # one file — the sized-write gate in test_frontier.py holds).
-            cur = df.rdd.getNumPartitions()
-            if cur < 2 * target:
-                return df
-            return df.coalesce(target)
-
-        # 6. discover links → next round's pending candidates (resolve +
-        # canonicalize fused into one Arrow stage)
-        links = (
-            proc.select(
-                (F.col("priority") * PRIORITY_DECAY).alias("priority"),
-                F.col("url").alias("base_url"),
-                F.explode_outer(F.col("doc.links")).alias("url"),
+            # 3. per-host PQ schedule
+            scheduled = _cache(
+                politeness.schedule_hosts(allowed, budget=self.budget, round_seconds=round_seconds)
+                .where(F.col("scheduled"))
             )
-            .where(F.col("url").isNotNull())
-        )
-        discovered = candidates_from_urls(
-            links,
-            round_no=round_no + 1,
-            id_prefix=self.id_prefix,
-            resolve_base_col="base_url",
-        )
 
-        # 7. new state — O(round delta) writes: settled rows APPEND to the
-        # status log, newly-admitted hashes APPEND to the known set, and only
-        # the pending working set (which shrinks as the wave settles) is
-        # replaced. History is never rewritten. Persists keep NATURAL
-        # parallelism (the fused counters job materializes them); the
-        # commit below writes `_sized(...)` views of the caches.
-        mark = lambda df, status: df.select(
-            "url_norm", "url_hash", "host", "priority",
-            F.lit(status).alias("status"), F.lit(round_no).cast("int").alias("round"), "idx_id",
-        )
-        settled_delta = (
-            mark(proc, "fetched")
-            .unionByName(mark(missing, "missing"))
-            .unionByName(mark(blocked, "skipped_robots"))
-        ).persist()
-        # not scheduled this round → stays pending (budget carry-over);
-        # one anti join against the union of settled keys
-        settled_keys = scheduled.select("url_hash").unionByName(blocked.select("url_hash"))
-        leftover = pending.join(settled_keys, "url_hash", "left_anti").select(
-            [f.name for f in FRONTIER_SCHEMA.fields]
-        )
-        # anti vs known only: every url_hash ever admitted (pending at any
-        # point) is in frontier_known — 8 B/row. Bloom-PREFILTERED (the
-        # bloom prunes the definitely-unknown majority, only maybe-known rows
-        # reach the exact left_anti). Without this, the append-only known
-        # table — ~80 GB of hashes at 10^10 URLs — shuffles in full every round;
-        # with it the exact join input is ≈ |discovered ∩ known| + FPR·rest.
-        # While the known set is still broadcast-sized (~16 B/hash; its row
-        # count is summed from the parent manifest's file stats — no job), a
-        # broadcast hash anti join beats the bloom mark + exact anti
-        # outright: the bloom exists to prune a SHUFFLE the broadcast regime
-        # never pays. A store without those stats takes the (exact) bloom
-        # path.
-        known_rows = _known_rows(parent)
-        if known_rows is not None and known_rows <= _KNOWN_BROADCAST_ROWS:
-            new_pending = discovered.join(
-                F.broadcast(known.select("url_hash")), "url_hash", "left_anti"
+            # 4. fetch: equi join on url_norm against keep-newest pages. The
+            # scheduled side is budget-bounded (≤ budget × hosts rows of a few
+            # small columns) — broadcast it so the html-heavy pages side NEVER
+            # shuffles: it streams straight from its cached partitions. The
+            # broadcast is CONDITIONAL, decided from the PARENT SNAPSHOT's
+            # pending_out counter (scheduled ⊆ pending, so pending_in is a free
+            # upper bound — no count() job, no extra round barrier): above
+            # ``_FETCH_BROADCAST_ROWS`` candidate rows the hint could exceed
+            # driver/broadcast limits, so fall back to a shuffle join and let
+            # AQE pick the strategy.
+            fetch_cols = ["url_norm", "url_hash", "host", "priority", "idx_id", "seq"]
+            sched_small = scheduled.select(*fetch_cols)
+            use_broadcast = n_pending_in <= _FETCH_BROADCAST_ROWS
+            if not use_broadcast:
+                # pending_in is only an upper bound and the schedule is budget-
+                # bounded: one count() on its cache decides precisely
+                use_broadcast = scheduled.count() <= _FETCH_BROADCAST_ROWS
+            if use_broadcast:
+                sched_small = F.broadcast(sched_small)
+            # NOT persisted: ``html`` flows through this frame exactly once, into
+            # the extraction UDF. Caching it here paid a second columnar encode
+            # of every fetched page's html per round — pure memory-subsystem
+            # traffic (the scarce resource at both 100 TB and on this host).
+            # Fetched-key reuses (status marks, missing anti join) read the
+            # html-free ``proc`` cache below instead.
+            fetched_rows = sched_small.join(
+                pages_prepared.select("url_norm", "url", "warc_ts", "html"), "url_norm", "inner"
             )
-        else:
-            new_pending = urlseen.filter_unseen(
-                discovered, known_shards, known, self.n_shards
-            )
-        pending_new = leftover.unionByName(new_pending).persist()
-        # known-set bloom kept in lockstep: this round's newly-admitted
-        # hashes (round == round_no+1 rows of the pending cache — the same
-        # cache-read trick as the frontier_known delta below) OR-merge into
-        # known_shards, so next round's discovered-link prefilter covers
-        # every admitted URL. Exactness is unaffected by bloom saturation
-        # (false positives only add rows to the exact join). FUSED
-        # build+merge (extend_shards): one shuffle + one pandas stage instead
-        # of build → bitmap-shuffle → merge (bit-identical, property-tested).
-        new_known_shards = urlseen.extend_shards(
-            known_shards,
-            pending_new.where(F.col("round") == round_no + 1).select("url_hash"),
-            self.n_shards,
-            self.bloom_bits,
-        )
 
-        # ALL round metrics via four CONCURRENT per-frame aggregations (guide
-        # §2.6) — the Metrics.counter analog, process.py:120. The
-        # settled/pending aggs double as the materialization of those caches
-        # (a groupBy over an unmaterialized persisted frame computes and
-        # caches every partition, exactly like the count() it replaces); the
-        # scheduled/proc aggs read caches the fused job above already
-        # materialized. Running the four small aggs concurrently folds the
-        # whole counters wall into the materialization window. Keys never
-        # collide across the two status frames (settled statuses ≠
-        # 'pending'). Leaving the block waits for every future, so no
-        # aggregation outlives a failed round.
-        from concurrent.futures import ThreadPoolExecutor
+            import time as _time
 
-        with ThreadPoolExecutor(max_workers=4) as pool:
-            s_fut = pool.submit(
-                lambda: settled_delta.groupBy("status", "round").agg(F.count(F.lit(1)).alias("n")).collect()
-            )
-            p_fut = pool.submit(
-                lambda: pending_new.groupBy("status", "round").agg(F.count(F.lit(1)).alias("n")).collect()
-            )
-            shard_fut = pool.submit(
-                lambda: scheduled.groupBy(
-                    urlseen.shard_of(F.col("url_hash"), self.n_shards).alias("shard_id")
-                ).agg(F.count(F.lit(1)).alias("n")).collect()
-            )
-            docs_fut = pool.submit(
-                lambda: proc.groupBy(F.col("doc.skip_reason").alias("reason"))
+            timing_on = os.environ.get("FRONTIER_TIMING")
+            phases: dict[str, float] = {}
+
+            def _mark(name: str, t0: float) -> float:
+                t = _time.perf_counter()
+                phases[name] = round(t - t0, 2)
+                return t
+
+            _t = _time.perf_counter()
+
+            # 5. process fetched pages (extraction pipeline; idx_id from page
+            # identity). In the broadcast-fetch regime the join output inherits
+            # the pages scan/cache partitioning — hash-random in url space, so
+            # host-skew-free by construction — and scan, broadcast probe and
+            # extraction UDF fuse into ONE stage with no shuffle touching html.
+            # The shuffle-join fallback partitions by hash(url_norm), equally
+            # host-skew-free, so the extraction UDF reads the join output as is
+            # (html crosses one exchange, never two; plan-tested).
+            # ``html`` is dropped BEFORE the persist: downstream consumers
+            # (marks, links, counters, meta/payload projections) never read it,
+            # so caching it would pay a columnar encode per round for bytes
+            # nobody decodes — and proc is the ONLY per-round cache of fetched
+            # pages (the join output itself is deliberately unpersisted above).
+            n_part = spark.sparkContext.defaultParallelism * 2
+            proc = _cache(pipeline.processed(fetched_rows, id_prefix=self.id_prefix).drop("html"))
+            # the docs_ok aggregation materializes the extraction cache BEFORE
+            # the concurrent counter aggregations below: two of them
+            # (settled_delta, and pending_new via discovered links) read proc,
+            # and would otherwise compute the heavy UDF twice in parallel.
+            n_docs_ok = sum(
+                r["n"] for r in proc.groupBy(F.col("doc.skip_reason").alias("reason"))
                 .agg(F.count(F.lit(1)).alias("n")).collect()
+                if r["reason"] == ""
             )
-            status_counts = {
-                (r["status"], int(r["round"])): r["n"] for r in s_fut.result() + p_fut.result()
-            }
-            n_docs_ok = sum(r["n"] for r in docs_fut.result() if r["reason"] == "")
-            lineage = sorted(
-                ({"shard_id": int(r["shard_id"]), "scheduled": r["n"]} for r in shard_fut.result()),
-                key=lambda d: d["shard_id"],
+            _t = _mark("schedule_fetch_extract", _t)
+            missing = scheduled.select("url_norm", "url_hash", "host", "priority", "idx_id").join(
+                proc.select("url_norm"), "url_norm", "left_anti"
             )
-        _t = _mark("counters_lineage_job", _t)
 
-        n_fetched = status_counts.get(("fetched", round_no), 0)
-        n_missing = status_counts.get(("missing", round_no), 0)
-        n_blocked = status_counts.get(("skipped_robots", round_no), 0)
-        n_scheduled = n_fetched + n_missing
-        counters = {
-            "round": round_no,
-            "pending_in": n_pending_in,
-            # pending never holds an already-scheduled URL (step 1), so no
-            # candidate settles as a duplicate; kept for the counter schema
-            "dup": 0,
-            "skipped_robots": n_blocked,
-            "skipped_budget": n_pending_in - n_blocked - n_scheduled,
-            "scheduled": n_scheduled,
-            "fetched": n_fetched,
-            "missing": n_missing,
-            "docs_ok": n_docs_ok,
-            "discovered_new": status_counts.get(("pending", round_no + 1), 0),
-        }
-        counters["pending_out"] = counters["skipped_budget"] + counters["discovered_new"]
-        counters["seen_total"] = seen_total + n_scheduled
-        # skipped_budget is derived, so the balance identity holds by
-        # construction: check it against the leftover (admitted in rounds ≤
-        # round_no) the pending aggregation counted, before the commit point
-        n_leftover = sum(n for (st, r), n in status_counts.items() if st == "pending" and r <= round_no)
-        if n_leftover != counters["skipped_budget"]:
-            raise RuntimeError(f"round {round_no}: {n_leftover} pending rows left over, "
-                               f"counters say skipped_budget={counters['skipped_budget']}")
-        n_settled = n_scheduled + n_blocked
-        self.store.commit(
-            # sized views over the ALREADY-MATERIALIZED caches (the counters
-            # job ran first): coalesce here merges cached partitions for the
-            # write — no recompute, no serialized upstream chain
-            tables={
-                "frontier_pending": _sized(pending_new, counters["pending_out"]),
-                "known_shards": new_known_shards,
-            },
-            append_tables={
-                "frontier_log": _sized(settled_delta, n_settled),
-                # new-round rows carry round == round_no+1 (leftover keeps
-                # its admission round ≤ round_no), so the known-set delta
-                # reads the pending cache — the old `new_pending.select`
-                # lineage re-ran the whole link-canonicalize UDF chain
-                # inside the commit
-                "frontier_known": _sized(
-                    pending_new.where(F.col("round") == round_no + 1).select("url_hash"),
-                    counters["discovered_new"],
-                ),
-                "schedule": _sized(
-                    scheduled.select(
-                        F.lit(round_no).cast("int").alias("round"),
-                        "host", "seq", "url_norm", "idx_id", "priority",
+            # Counter-driven partition sizing for round-delta WRITES: every
+            # written frame is sized from the EXACT row count the counter
+            # aggregations compute (no count() job). The deltas are unions/projections
+            # of upstream caches and would otherwise inherit the SUM of their
+            # parents' partition counts — dozens of near-empty parquet files per
+            # commit, a fixed per-round cost that caps small-round scaling.
+            #
+            # CRITICAL placement rule, measured the hard way: coalesce ONLY on
+            # the write side of a persist boundary (or on pure projections of
+            # a cache), never upstream of real compute. coalesce() propagates
+            # through narrow chains, and when AQE broadcasts the small side of
+            # an anti join the whole chain above it becomes narrow — a
+            # pre-persist coalesce(1) then serializes the anti join, the cache
+            # scans, even the link-canonicalize Arrow UDF into one task
+            # (measured: 10-16 s fused counters job degrading to 62-86 s,
+            # intermittent with AQE's runtime broadcast decision). At 10^10
+            # round sizes the same formula yields ≥ cluster parallelism, so
+            # the write files stay right-sized either way.
+            def _sized(df: DataFrame, est_rows: int, rows_per_part: int = 65536) -> DataFrame:
+                # CONTRACT: call only on persisted-and-materialized frames or
+                # pure projections of them. df.rdd below compiles a physical
+                # plan (and under AQE can eagerly materialize shuffle stages);
+                # it is cheap here only because every input is a narrow view of
+                # an already-materialized cache (ADVICE r5).
+                target = int(min(max(1, est_rows // rows_per_part + 1), n_part))
+                # coalesce merges by PULLING sibling partitions into the
+                # surviving tasks — on multi-JVM executors that is remote
+                # block fetch of the whole frame. Worth it when it collapses
+                # dozens of near-empty files into a few; NOT worth it when the
+                # frame already sits near the target (measured: the payload
+                # write's 15→12 merge cost 15.2 s at 16 one-core executors vs
+                # 6.9 s at 4 — cross-executor traffic for a 20 % file-count
+                # trim). Skip unless the merge at least halves the file count
+                # (tiny rounds: any cur ≥ 2 with target 1 still collapses to
+                # one file — the sized-write gate in test_frontier.py holds).
+                cur = df.rdd.getNumPartitions()
+                if cur < 2 * target:
+                    return df
+                return df.coalesce(target)
+
+            # 6. discover links → next round's pending candidates (resolve +
+            # canonicalize fused into one Arrow stage)
+            links = (
+                proc.select(
+                    (F.col("priority") * PRIORITY_DECAY).alias("priority"),
+                    F.col("url").alias("base_url"),
+                    F.explode_outer(F.col("doc.links")).alias("url"),
+                )
+                .where(F.col("url").isNotNull())
+            )
+            discovered = candidates_from_urls(
+                links,
+                round_no=round_no + 1,
+                id_prefix=self.id_prefix,
+                resolve_base_col="base_url",
+            )
+
+            # 7. new state — O(round delta) writes: settled rows APPEND to the
+            # status log, newly-admitted hashes APPEND to the known set, and only
+            # the pending working set (which shrinks as the wave settles) is
+            # replaced. History is never rewritten. Persists keep NATURAL
+            # parallelism (the counter aggregations materialize them); the
+            # commit below writes `_sized(...)` views of the caches.
+            mark = lambda df, status: df.select(
+                "url_norm", "url_hash", "host", "priority",
+                F.lit(status).alias("status"), F.lit(round_no).cast("int").alias("round"), "idx_id",
+            )
+            settled_delta = _cache(
+                mark(proc, "fetched")
+                .unionByName(mark(missing, "missing"))
+                .unionByName(mark(blocked, "skipped_robots"))
+            )
+            # allowed but not scheduled this round → stays pending (budget
+            # carry-over); every pending row is either blocked or allowed
+            leftover = allowed.join(scheduled.select("url_hash"), "url_hash", "left_anti").select(
+                [f.name for f in FRONTIER_SCHEMA.fields]
+            )
+            # anti vs known only: every url_hash ever admitted (pending at any
+            # point) is in frontier_known — 8 B/row. Bloom-PREFILTERED: the
+            # bloom passes the definitely-unknown majority of discovered links
+            # straight through, so only maybe-known rows (≈ |discovered ∩
+            # known| + FPR·rest) form the probe side of the exact left_anti.
+            # Its build side is still the whole append-only known table
+            # (~80 GB of hashes at 10^10 URLs), which that join shuffles.
+            # While the known set is still broadcast-sized (~16 B/hash; its row
+            # count is summed from the parent manifest's file stats — no job), a
+            # broadcast hash anti join beats the bloom mark + exact anti
+            # outright: the bloom exists to prune a SHUFFLE the broadcast regime
+            # never pays. A store without those stats takes the (exact) bloom
+            # path.
+            known_rows = _known_rows(parent)
+            if known_rows is not None and known_rows <= _KNOWN_BROADCAST_ROWS:
+                new_pending = discovered.join(
+                    F.broadcast(known.select("url_hash")), "url_hash", "left_anti"
+                )
+            else:
+                new_pending = urlseen.filter_unseen(
+                    discovered, known_shards, known, self.n_shards
+                )
+            pending_new = _cache(leftover.unionByName(new_pending))
+            # known-set bloom kept in lockstep: this round's newly-admitted
+            # hashes (round == round_no+1 rows of the pending cache — the same
+            # cache-read trick as the frontier_known delta below) OR-merge into
+            # known_shards, so next round's discovered-link prefilter covers
+            # every admitted URL. Exactness is unaffected by bloom saturation
+            # (false positives only add rows to the exact join). FUSED
+            # build+merge (extend_shards): one shuffle + one pandas stage instead
+            # of build → bitmap-shuffle → merge (bit-identical, property-tested).
+            new_known_shards = urlseen.extend_shards(
+                known_shards,
+                pending_new.where(F.col("round") == round_no + 1).select("url_hash"),
+                self.n_shards,
+                self.bloom_bits,
+            )
+
+            # The other round metrics via three CONCURRENT per-frame
+            # aggregations (guide §2.6) — the Metrics.counter analog,
+            # process.py:120. The settled/pending aggs double as the
+            # materialization of those caches (a groupBy over an unmaterialized
+            # persisted frame computes and caches every partition, exactly like
+            # a count()); the scheduled agg reads a cache the docs_ok
+            # aggregation above already materialized. Running the three small
+            # aggs concurrently folds the whole counters wall into the
+            # materialization window. Keys never collide across the two status
+            # frames (settled statuses ≠ 'pending'). Leaving the block waits
+            # for every future, so no aggregation outlives a failed round.
+            from concurrent.futures import ThreadPoolExecutor
+
+            with ThreadPoolExecutor(max_workers=3) as pool:
+                s_fut = pool.submit(
+                    lambda: settled_delta.groupBy("status", "round").agg(F.count(F.lit(1)).alias("n")).collect()
+                )
+                p_fut = pool.submit(
+                    lambda: pending_new.groupBy("status", "round").agg(F.count(F.lit(1)).alias("n")).collect()
+                )
+                shard_fut = pool.submit(
+                    lambda: scheduled.groupBy(
+                        urlseen.shard_of(F.col("url_hash"), self.n_shards).alias("shard_id")
+                    ).agg(F.count(F.lit(1)).alias("n")).collect()
+                )
+                status_counts = {
+                    (r["status"], int(r["round"])): r["n"] for r in s_fut.result() + p_fut.result()
+                }
+                lineage = sorted(
+                    ({"shard_id": int(r["shard_id"]), "scheduled": r["n"]} for r in shard_fut.result()),
+                    key=lambda d: d["shard_id"],
+                )
+            _t = _mark("counters_lineage_job", _t)
+
+            n_fetched = status_counts.get(("fetched", round_no), 0)
+            n_missing = status_counts.get(("missing", round_no), 0)
+            n_blocked = status_counts.get(("skipped_robots", round_no), 0)
+            n_scheduled = n_fetched + n_missing
+            counters = {
+                "round": round_no,
+                "pending_in": n_pending_in,
+                # pending never holds an already-scheduled URL (step 1), so no
+                # candidate settles as a duplicate; kept for the counter schema
+                "dup": 0,
+                "skipped_robots": n_blocked,
+                "skipped_budget": n_pending_in - n_blocked - n_scheduled,
+                "scheduled": n_scheduled,
+                "fetched": n_fetched,
+                "missing": n_missing,
+                "docs_ok": n_docs_ok,
+                "discovered_new": status_counts.get(("pending", round_no + 1), 0),
+            }
+            counters["pending_out"] = counters["skipped_budget"] + counters["discovered_new"]
+            counters["seen_total"] = seen_total + n_scheduled
+            # skipped_budget is derived, so the balance identity holds by
+            # construction: check it against the leftover (admitted in rounds ≤
+            # round_no) the pending aggregation counted, before the commit point
+            n_leftover = sum(n for (st, r), n in status_counts.items() if st == "pending" and r <= round_no)
+            if n_leftover != counters["skipped_budget"]:
+                raise RuntimeError(f"round {round_no}: {n_leftover} pending rows left over, "
+                                   f"counters say skipped_budget={counters['skipped_budget']}")
+            n_settled = n_scheduled + n_blocked
+            self.store.commit(
+                # sized views over the ALREADY-MATERIALIZED caches (the counters
+                # job ran first): coalesce here merges cached partitions for the
+                # write — no recompute, no serialized upstream chain
+                tables={
+                    "frontier_pending": _sized(pending_new, counters["pending_out"]),
+                    "known_shards": new_known_shards,
+                },
+                append_tables={
+                    "frontier_log": _sized(settled_delta, n_settled),
+                    # new-round rows carry round == round_no+1 (leftover keeps
+                    # its admission round ≤ round_no), so the known-set delta
+                    # reads the pending cache — the old `new_pending.select`
+                    # lineage re-ran the whole link-canonicalize UDF chain
+                    # inside the commit
+                    "frontier_known": _sized(
+                        pending_new.where(F.col("round") == round_no + 1).select("url_hash"),
+                        counters["discovered_new"],
                     ),
-                    n_scheduled,
-                ),
-                # write-only projections of the proc cache: coalesce merges
-                # cached partitions, no recompute; coalesce BEFORE
-                # sortWithinPartitions keeps the sink's per-partition order.
-                # Their rows are WIDE (payload carries body + full_body, ~tens
-                # of KB/row), so the target is byte-informed: 64k wide rows
-                # in one file is a ~GB single-task parquet encode that
-                # serializes the commit (measured 81 s at local[4]); 8k
-                # rows/file lands in the 100-250 MB lake sweet spot.
-                "meta_docs": _sized(
-                    pipeline.meta_docs(proc), n_docs_ok, rows_per_part=16384
-                ).sortWithinPartitions("idx_id"),
-                "payload_docs": _sized(
-                    pipeline.payload_docs(proc), n_docs_ok, rows_per_part=8192
-                ).sortWithinPartitions("idx_id"),
-            },
-            carry_tables=["robots"],
-            counters=counters,
-            lineage=lineage,
-            note=f"round-{round_no}",
-        )
-        _mark("commit_writes", _t)
-        if timing_on:
-            print(f"[frontier-timing] round {round_no}: {phases}", flush=True)
-            counters["phases"] = phases  # machine-readable (scaling harness)
-        for df in (pending, sched_all, proc, settled_delta, pending_new):
-            df.unpersist()
-        return counters
+                    "schedule": _sized(
+                        scheduled.select(
+                            F.lit(round_no).cast("int").alias("round"),
+                            "host", "seq", "url_norm", "idx_id", "priority",
+                        ),
+                        n_scheduled,
+                    ),
+                    # write-only projections of the proc cache: coalesce merges
+                    # cached partitions, no recompute; coalesce BEFORE
+                    # sortWithinPartitions keeps the sink's per-partition order.
+                    # Their rows are WIDE (payload carries body + full_body, ~tens
+                    # of KB/row), so the target is byte-informed: 64k wide rows
+                    # in one file is a ~GB single-task parquet encode that
+                    # serializes the commit (measured 81 s at local[4]); 8k
+                    # rows/file lands in the 100-250 MB lake sweet spot.
+                    "meta_docs": _sized(
+                        pipeline.meta_docs(proc), n_docs_ok, rows_per_part=16384
+                    ).sortWithinPartitions("idx_id"),
+                    "payload_docs": _sized(
+                        pipeline.payload_docs(proc), n_docs_ok, rows_per_part=8192
+                    ).sortWithinPartitions("idx_id"),
+                },
+                carry_tables=["robots"],
+                counters=counters,
+                lineage=lineage,
+                note=f"round-{round_no}",
+            )
+            _mark("commit_writes", _t)
+            if timing_on:
+                print(f"[frontier-timing] round {round_no}: {phases}", flush=True)
+                counters["phases"] = phases  # machine-readable (scaling harness)
+            return counters
+        finally:
+            for df in caches:
+                df.unpersist()
 
     # ------------------------------------------------------------- loop
 

@@ -41,18 +41,22 @@ def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{table}.parquet")
 
 
-def _parquet_scan_width(path: str) -> int:
+def _parquet_scan_width(path: str, enough: int) -> int:
     """Effective max parallel scan tasks for a parquet path = total row
     groups across its files. Spark splits files by byte ranges, but a split
     only yields rows for row groups whose midpoint it contains — a
     single-row-group file is effectively unsplittable no matter how many
-    byte-range splits the planner makes. Footer reads only, no data scan."""
+    byte-range splits the planner makes. Footer reads only, no data scan.
+    Each non-empty file holds at least one row group, so a path of at least
+    ``enough`` files returns its file count without opening any footer."""
     import glob
     import os
 
     import pyarrow.parquet as pq
 
     files = [path] if os.path.isfile(path) else glob.glob(os.path.join(path, "*.parquet"))
+    if len(files) >= enough:
+        return len(files)
     return sum(pq.ParquetFile(f).metadata.num_row_groups for f in files)
 
 
@@ -68,11 +72,12 @@ def load_wide(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     shuffle — nothing here is tuned to local[32]."""
     df = load(spark, sf_dir, table)
     cores = spark.sparkContext.defaultParallelism
+    enough = max(2, cores // 2)
     try:
-        width = _parquet_scan_width(f"{sf_dir}/{table}.parquet")
+        width = _parquet_scan_width(f"{sf_dir}/{table}.parquet", enough)
     except Exception:
         return df
-    if width < max(2, cores // 2):
+    if width < enough:
         return df.repartition(cores)
     return df
 

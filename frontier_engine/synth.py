@@ -303,19 +303,3 @@ def generate_robots(pages: pd.DataFrame, seed: int = 42) -> pd.DataFrame:
             txt = f"User-agent: *\nCrawl-delay: {rng.randrange(1, 10)}\nDisallow: /section7/\n"
         rows.append({"host": h, "robots_txt": txt})
     return pd.DataFrame(rows)
-
-
-def generate_rank_files(pages: pd.DataFrame, seed: int = 42) -> tuple[list[str], list[str]]:
-    """(spam_lines '<value> <id>', page_lines '<id> <value>') with malformed
-    lines that the parser must silently drop (process.py:477-506)."""
-    rng = random.Random(seed + 3)
-    urls = sorted(pages["url"].unique().tolist())
-    spam, pr = [], []
-    for i, u in enumerate(urls):
-        if i % 3 == 0:
-            spam.append(f"{rng.randrange(0, 100)} {u}")
-        if i % 2 == 0:
-            pr.append(f"{u} {rng.random():.6f}")
-    spam.extend(["notanumber https://x.com/a", "99", ""])  # malformed → dropped
-    pr.extend(["https://x.com/b not_a_float", "lonely_token"])
-    return spam, pr

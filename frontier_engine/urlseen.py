@@ -247,11 +247,13 @@ def filter_unseen(
 ) -> DataFrame:
     """Exact unseen set: bloom prefilter prunes the (vast) definitely-unseen
     majority from the anti join; only maybe-seen rows shuffle against the
-    seen table (SURVEY.md §2.3 URL-seen anti join)."""
+    seen table (SURVEY.md §2.3 URL-seen anti join). The seen side joins as
+    it is: a left anti join's result ignores duplicates on that side, so a
+    distinct there would only aggregate the whole seen set."""
     marked = mark_maybe_seen(candidates, shards, n_shards)
     fresh = marked.where(~F.col("maybe_seen"))
     survivors = (
         marked.where(F.col("maybe_seen"))
-        .join(seen.select("url_hash").distinct(), "url_hash", "left_anti")
+        .join(seen.select("url_hash"), "url_hash", "left_anti")
     )
     return fresh.unionByName(survivors).drop("maybe_seen", "shard_id")

@@ -3,6 +3,7 @@ kill/resume determinism gate (SURVEY.md §5.4, north_rule)."""
 
 from __future__ import annotations
 
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
@@ -319,9 +320,9 @@ class TestFrontierRounds:
 
     def test_failed_write_aborts_round_and_retry_matches(self, spark, tmp_path, run3, crawl_inputs):
         """A table write raising inside ``IceLite.commit``'s pool fails the
-        round before its commit point: no thread pool outlives it, no
-        manifest is written, and a retry commits the same counters as a
-        clean run."""
+        round before its commit point: no thread pool or cached frame
+        outlives it, no manifest is written, and a retry commits the same
+        counters as a clean run."""
         import os
         import threading
 
@@ -337,9 +338,11 @@ class TestFrontierRounds:
             return real_write(name, df, snap_id)
 
         threads_before = set(threading.enumerate())
+        cached_before = spark.sparkContext._jsc.getPersistentRDDs().size()
         eng.store.write_table = failing_write
         with pytest.raises(OSError, match="injected"):
             eng.run_round(pages_prepared)
+        assert spark.sparkContext._jsc.getPersistentRDDs().size() == cached_before
         leaked = [
             t for t in threading.enumerate()
             if t not in threads_before and t.name.startswith("ThreadPoolExecutor")
@@ -351,6 +354,39 @@ class TestFrontierRounds:
         ]
         eng.store.write_table = real_write
         assert eng.run_round(pages_prepared) == run3[1][0]
+
+    def test_robots_gate_runs_once_per_pending_row(self, spark, tmp_path, crawl_inputs):
+        """The robots gate's output is evaluated once per round: the allowed
+        and blocked branches both read one cached verdict, so the rule
+        kernel sees each pending row once. A spy wraps ``robots_allowed`` in
+        a pandas UDF that logs each batch's row count to a file (UDFs run
+        in Python worker processes)."""
+        from frontier_engine import politeness
+
+        log = tmp_path / "gate_rows.txt"
+        log.touch()
+        real_gate = politeness.apply_robots_gate
+
+        @F.pandas_udf("boolean")
+        def count_rows(allowed: pd.Series) -> pd.Series:
+            with open(log, "a") as f:
+                f.write(f"{len(allowed)}\n")
+            return allowed
+
+        def gate_spy(candidates, robots):
+            gated = real_gate(candidates, robots)
+            return gated.withColumn(
+                "robots_allowed", count_rows.asNondeterministic()(F.col("robots_allowed"))
+            )
+
+        _, seeds, robots, pages_prepared = crawl_inputs
+        eng = _mk_engine(spark, tmp_path, "robots_once")
+        eng.init(seeds, robots)
+        with pytest.MonkeyPatch.context() as mp:
+            mp.setattr(politeness, "apply_robots_gate", gate_spy)
+            counters = eng.run_round(pages_prepared)
+        assert counters["skipped_robots"] > 0
+        assert sum(int(n) for n in log.read_text().split()) == counters["pending_in"]
 
 
 class TestResumeDeterminism:

@@ -4,6 +4,8 @@ pushdown, pruning, broadcast, partial aggregation — that row counts can't."""
 
 from __future__ import annotations
 
+from itertools import takewhile
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -83,6 +85,33 @@ class TestPlanShapes:
         read_schema = plan.split("ReadSchema:")[1]
         assert "html" not in read_schema
 
+    def test_load_wide_probes_footers_only_for_narrow_tables(self, spark, tmp_path, monkeypatch):
+        """A table of at least max(2, cores // 2) files already scans that
+        wide (each non-empty file holds a row group), so ``load_wide``
+        opens no parquet footer and adds no repartition. A single-file
+        table keeps the footer probe and is fanned out."""
+        import pyarrow.parquet as pq
+
+        enough = max(2, spark.sparkContext.defaultParallelism // 2)
+        spark.range(100).repartition(enough).write.parquet(str(tmp_path / "multi.parquet"))
+        spark.range(100).coalesce(1).write.parquet(str(tmp_path / "single.parquet"))
+        opened = []
+        real_parquet_file = pq.ParquetFile
+
+        def counting_parquet_file(*args, **kwargs):
+            opened.append(args[0])
+            return real_parquet_file(*args, **kwargs)
+
+        monkeypatch.setattr(pq, "ParquetFile", counting_parquet_file)
+        multi = Q.load_wide(spark, str(tmp_path), "multi")
+        assert opened == []
+        single = Q.load_wide(spark, str(tmp_path), "single")
+        assert len(opened) == 1
+        assert "RoundRobinPartitioning" not in plan_of(multi)
+        assert "RoundRobinPartitioning" in plan_of(single)
+        for df in (multi, single):
+            assert sorted(r.id for r in df.collect()) == list(range(100))
+
     def test_ranks_join_broadcast(self, spark, tmp_path):
         from frontier_engine import ranks
 
@@ -138,12 +167,15 @@ class TestPlanShapes:
         assert "BroadcastHashJoin" not in plan and "SortMergeJoin" not in plan
 
     def test_exact_anti_join_input_is_bloom_survivors(self, spark):
-        """filter_unseen's EXACT anti join must consume only the bloom's
-        maybe-member survivors — never the full candidate set (the known/
-        seen tables are ~80 GB of hashes at 10^10 URLs; the prune is what
-        keeps the per-round shuffle ∝ |survivors|). Asserted two ways:
-        plan shape (the LeftAnti's probe side filters on maybe_seen) and
-        measured IO (survivor count ≈ known ∩ candidates + FPR·rest)."""
+        """filter_unseen's EXACT anti join must probe with only the bloom's
+        maybe-member survivors — never the full candidate set. The bloom
+        shrinks the probe side only: the build side is still the whole
+        known set (~80 GB of hashes at 10^10 URLs), so it must reach the
+        join unaggregated (a left anti join ignores duplicates on its build
+        side; a distinct there would aggregate the known set every round).
+        Asserted three ways: plan shape (the LeftAnti's probe side filters
+        on maybe_seen, and no Aggregate sits on its build side), measured
+        IO (survivor count ≈ known ∩ candidates + FPR·rest) and exactness."""
         from frontier_engine import urlseen
 
         cand = (
@@ -156,9 +188,16 @@ class TestPlanShapes:
         out = urlseen.filter_unseen(cand, shards, known.select("url_hash"), 8)
 
         plan = optimized_of(out)
-        join_at = plan.index("Join LeftAnti")
-        probe = "\n".join(plan[join_at:].splitlines()[1:4])
-        assert "maybe_seen" in probe, plan
+        lines = plan.splitlines()
+        at = next(i for i, line in enumerate(lines) if "Join LeftAnti" in line)
+        assert any("maybe_seen" in line for line in lines[at + 1:at + 4]), plan
+        col = lines[at].index("Join")
+        # the build side: the join's "+-" child and every line nested under it
+        right = next(i for i in range(at + 1, len(lines)) if lines[i][col:col + 2] == "+-")
+        build = [lines[right]] + list(
+            takewhile(lambda line: not line[:col + 3].strip(), lines[right + 1:])
+        )
+        assert not any("Aggregate" in line for line in build), plan
         # measured prune: exact-join input ≪ candidates (10 known + FP)
         survivors = urlseen.mark_maybe_seen(cand, shards, 8).where("maybe_seen")
         assert survivors.count() < 50
