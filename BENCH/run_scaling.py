@@ -261,7 +261,6 @@ def run_job(cores: int, pages_path: str, seeds: int, budget: int, rounds: int,
     env = dict(
         os.environ, PYTHONPATH=REPO, FRONTIER_SHM_TMP="1", SPARK_LOCAL_DIRS=local_dir,
         SPARK_WORKER_DIR=worker_dir,
-        FRONTIER_TIMING="1",  # per-phase round timings land in counters[i]["phases"]
     )
     shm_before = _shm_used_mb()
     load_before = os.getloadavg()[0]
@@ -549,7 +548,8 @@ def write_paired_report(pairs: list[dict], args) -> None:
     )
 
     # MEASURED shortfall attribution (VERDICT r3 item 2): per-phase
-    # scaling from the in-run FRONTIER_TIMING marks. For identical work,
+    # scaling from each round's snapshot trace (the job copies it into
+    # counters[i]["phases"]). For identical work,
     # phase efficiency = (t_lo / t_hi) / (hi/lo).
     phase_rows = ""
     phase_note = ""
@@ -585,10 +585,10 @@ def write_paired_report(pairs: list[dict], args) -> None:
             )
             phase_note = (
                 "\nPhase efficiencies are measured inside each run "
-                "(FRONTIER_TIMING marks), so the job-level shortfall is "
+                "(snapshot trace phase walls), so the job-level shortfall is "
                 "attributable, not argued: the extraction-dominated phase "
                 "carries the parallel work; `counters_lineage_job` and "
-                "`commit_writes` are small fixed-latency Spark jobs whose "
+                "`write_s` are small fixed-latency Spark jobs whose "
                 "cost is constant per ROUND, not per page — at this "
                 "deliberately small pair-sized job they cap job-level "
                 "efficiency, while at 10^10-frontier round sizes (10^4× "

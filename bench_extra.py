@@ -7,7 +7,6 @@ isolation while iterating on optimizations.
 Usage:
   python bench_extra.py time  [sf_dir] [q1 q2 ...]   # per-query noop timing
   python bench_extra.py plan  [sf_dir] [out_dir] [q1 ...]  # explain("formatted")
-  python bench_extra.py frontier [n_pages] [rounds]  # profiled frontier rounds
 """
 
 from __future__ import annotations
@@ -77,59 +76,6 @@ def cmd_plan(sf_dir: str, out_dir: str, names: list[str]) -> None:
     spark.stop()
 
 
-def cmd_frontier(n_pages: int = 30000, rounds: int = 3) -> None:
-    """FRONTIER_TIMING-profiled multi-round run on one store (mirrors the
-    bench's frontier_rounds_multi stage, with phase attribution on)."""
-    import shutil
-    import tempfile
-
-    from pyspark.sql import functions as F
-
-    from frontier_engine import pipeline, synth
-    from frontier_engine.frontier import FrontierEngine
-
-    os.environ["FRONTIER_TIMING"] = "1"
-    spark = _spark()
-    pages_f = synth.generate_pages_spark(spark, n_pages, n_hosts=150, paras=40)
-    prepared = pipeline.dedup_newest(pipeline.canonicalized(pages_f)).persist()
-    prepared.count()
-    seeds = (
-        prepared.select("url")
-        .withColumn("h", F.xxhash64("url"))
-        .orderBy("h")
-        .limit(max(200, n_pages // 8))
-        .select("url", (F.pmod(F.col("h"), F.lit(100)) / 100.0).alias("priority"))
-    )
-    robots = prepared.select("host").distinct().select(
-        "host", F.lit("User-agent: *\nDisallow: /private/\n").alias("robots_txt")
-    )
-    # warmup store
-    ws = tempfile.mkdtemp(prefix="bx_frontier_w_")
-    try:
-        w = FrontierEngine(spark, ws, n_shards=64, bloom_bits=1 << 20, budget=200)
-        w.init(seeds, robots)
-        w.run_round(prepared)
-    finally:
-        shutil.rmtree(ws, ignore_errors=True)
-    store = tempfile.mkdtemp(prefix="bx_frontier_")
-    try:
-        eng = FrontierEngine(spark, store, n_shards=64, bloom_bits=1 << 20, budget=200)
-        eng.init(seeds, robots)
-        for r in range(rounds):
-            t0 = time.perf_counter()
-            c = eng.run_round(prepared)
-            dt = time.perf_counter() - t0
-            urls = c["scheduled"] + c["fetched"]
-            print(
-                f"round {r}: {dt:.2f}s urls={urls} ({urls/dt:.0f}/s) "
-                f"phases={c.get('phases')}",
-                flush=True,
-            )
-    finally:
-        shutil.rmtree(store, ignore_errors=True)
-    spark.stop()
-
-
 if __name__ == "__main__":
     cmd = sys.argv[1] if len(sys.argv) > 1 else "time"
     if cmd == "time":
@@ -139,9 +85,5 @@ if __name__ == "__main__":
         sf = sys.argv[2] if len(sys.argv) > 2 else DEFAULT_SF
         out = sys.argv[3] if len(sys.argv) > 3 else "plans/r06/tmp"
         cmd_plan(sf, out, sys.argv[4:])
-    elif cmd == "frontier":
-        n = int(sys.argv[2]) if len(sys.argv) > 2 else 30000
-        r = int(sys.argv[3]) if len(sys.argv) > 3 else 3
-        cmd_frontier(n, r)
     else:
         raise SystemExit(f"unknown command {cmd}")

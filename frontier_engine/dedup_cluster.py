@@ -36,6 +36,12 @@ def connected_components(nodes: DataFrame, edges: DataFrame, max_iter: int = 20)
 
     ``nodes``: one column ``id``; ``edges``: columns ``a``, ``b``
     (undirected semantics; pass each pair once). Returns (id, cluster_id).
+
+    Failure mode: the edge set and each round's labels are
+    ``localCheckpoint``-ed, i.e. kept only as cached blocks on the
+    executors, with their lineage truncated. If an executor holding such a
+    block is lost, Spark cannot recompute it and the job fails (the result
+    is never silently wrong); rerun the call.
     """
     # r6: the undirected edge set (and the node set it touches) is
     # localCheckpoint-ed ONCE — it is read by every iteration's action, and

@@ -23,16 +23,23 @@ it. So pending never holds a URL that was scheduled before, and a second
 filter at round start could never remove a row (the ``dup`` counter stays
 0 for that reason).
 
-State layout (write volume ∝ round delta, never ∝ crawl size):
+State layout (row writes ∝ round delta, never ∝ crawl size; the bloom is
+the exception):
   frontier_pending  REPLACED  the working set (grows/shrinks with the crawl
-                              wave — the only full rewrite, and it IS the
-                              active state, not history)
+                              wave; it IS the active state, not history)
   frontier_log      APPEND    settled rows (fetched/missing/blocked) from
                               this round only
   frontier_known    APPEND    url_hash of every candidate ever admitted —
                               the URL-seen set (8 B/row)
-  known_shards      REPLACED  bloom shards over frontier_known (urlseen.py)
+  known_shards      REPLACED  bloom shards over frontier_known (urlseen.py),
+                              rewritten whole every round: its writes are
+                              ∝ n_shards × bloom_bits / 8, not ∝ the delta
+                              (~12 GB per round at the 10^10 sizing in
+                              urlseen.py's docstring)
 A full historical frontier view is ``frontier_table()`` = pending ∪ log.
+Each snapshot's ``trace`` holds the round's phase walls
+(``schedule_fetch_extract``, ``counters_lineage_job``) and the commit's
+``write_s``.
 
 Round caches (each step above runs once; ``run_round`` unpersists all five
 when the round ends, whether it commits or raises):
@@ -59,12 +66,15 @@ exact anti join. Schedules up to _FETCH_BROADCAST_ROWS rows are broadcast
 into the fetch join, so the html-heavy pages side never shuffles; larger
 ones take a plain equi join on url_norm, whose hash partitioning already
 spreads a hot host's URLs evenly. The only other frontier-wide shuffle is
-the per-host window/groupBy.
+the per-host window/groupBy. Known-set broadcast × shuffle fetch is reachable
+only with the gates forced (the tests set them to 0): the fetch gate reads
+pending_in, and scheduled ≤ pending_in ≤ known rows ≤ 1 M < 8 M.
 """
 
 from __future__ import annotations
 
 import os
+import time
 from typing import Optional
 
 import pandas as pd
@@ -110,7 +120,6 @@ def _known_rows(snap: dict) -> Optional[int]:
 
 
 def candidates_from_urls(df: DataFrame, round_no: int, id_prefix: str,
-                         priority_col: str = "priority",
                          resolve_base_col: str | None = None) -> DataFrame:
     """urls (+priority) → frontier rows (canonicalized, hashed, identified).
 
@@ -126,10 +135,18 @@ def candidates_from_urls(df: DataFrame, round_no: int, id_prefix: str,
     the url_norm group is deterministic in value.
 
     ``resolve_base_col``: if set, ``url`` holds raw hrefs resolved against
-    this base-URL column first (link discovery path).
+    this base-URL column first (link discovery path); seeds pass no base.
     """
 
-    def _identify(urls_norm: pd.Series) -> pd.DataFrame:
+    @F.pandas_udf("url_norm string, host string, idx_id string")
+    def _canon_id(base: pd.Series, href: pd.Series) -> pd.DataFrame:
+        from urllib.parse import urljoin
+
+        resolved = pd.Series(
+            [urljoin(b, h) if b is not None and h is not None else h for b, h in zip(base, href)],
+            index=href.index, dtype="object",
+        )
+        urls_norm = canonicalize_series(resolved)
         ids = []
         for u in urls_norm:
             src, off = derive_source(u)
@@ -138,30 +155,10 @@ def candidates_from_urls(df: DataFrame, round_no: int, id_prefix: str,
             {"url_norm": urls_norm, "host": host_series(urls_norm), "idx_id": ids}
         )
 
-    if resolve_base_col:
-
-        @F.pandas_udf("url_norm string, host string, idx_id string")
-        def _canon_id(base: pd.Series, href: pd.Series) -> pd.DataFrame:
-            from urllib.parse import urljoin
-
-            resolved = pd.Series(
-                [urljoin(b, h) if (b is not None and h is not None) else None for b, h in zip(base, href)],
-                index=href.index, dtype="object",
-            )
-            return _identify(canonicalize_series(resolved))
-
-        canon_col = _canon_id(F.col(resolve_base_col), F.col("url"))
-    else:
-
-        @F.pandas_udf("url_norm string, host string, idx_id string")
-        def _canon_id(urls: pd.Series) -> pd.DataFrame:
-            return _identify(canonicalize_series(urls))
-
-        canon_col = _canon_id(F.col("url"))
-
+    base = F.col(resolve_base_col) if resolve_base_col else F.lit(None).cast("string")
     out = (
-        df.withColumn("_ci", canon_col)
-        .withColumn("priority", F.coalesce(F.col(priority_col).cast("double"), F.lit(0.5)))
+        df.withColumn("_ci", _canon_id(base, F.col("url")))
+        .withColumn("priority", F.coalesce(F.col("priority").cast("double"), F.lit(0.5)))
         # duplicate spellings of one page collapse here; keep max priority
         # (host/idx_id are url_norm-determined → any_value is exact)
         .groupBy(F.col("_ci.url_norm").alias("url_norm"))
@@ -187,6 +184,7 @@ class FrontierEngine:
         bloom_bits: int = 1 << 20,
         budget: int = politeness.DEFAULT_BUDGET,
     ):
+        urlseen.check_bits(bloom_bits)  # before IceLite creates the store dirs
         self.spark = spark
         # round-keyed append tables declare file stats so readers prune to
         # the rounds they want (Iceberg manifest min/max semantics); the
@@ -215,8 +213,8 @@ class FrontierEngine:
         sid = self.store.commit(
             tables={
                 "frontier_pending": frontier,
-                "known_shards": urlseen.build_shards(
-                    frontier.select("url_hash"), self.n_shards, self.bloom_bits
+                "known_shards": urlseen.extend_shards(
+                    None, frontier.select("url_hash"), self.n_shards, self.bloom_bits
                 ),
                 "robots": robots,
             },
@@ -232,10 +230,11 @@ class FrontierEngine:
 
     # ------------------------------------------------------------- round
 
-    def run_round(self, pages_prepared: DataFrame, round_seconds: int = politeness.ROUND_SECONDS) -> dict:
+    def run_round(self, pages_prepared: DataFrame) -> dict:
         """One frontier round against a prepared pages table
         (``pipeline.canonicalized`` + ``pipeline.dedup_newest`` applied).
-        Returns the committed counters."""
+        Returns the committed counters; the snapshot's ``trace`` also holds
+        the round's phase walls."""
         spark = self.spark
         parent = self.store.snapshot(self.store.current_snapshot_id())
         prev_counters = parent["counters"]
@@ -269,7 +268,7 @@ class FrontierEngine:
 
             # 3. per-host PQ schedule
             scheduled = _cache(
-                politeness.schedule_hosts(allowed, budget=self.budget, round_seconds=round_seconds)
+                politeness.schedule_hosts(allowed, budget=self.budget)
                 .where(F.col("scheduled"))
             )
 
@@ -302,17 +301,15 @@ class FrontierEngine:
                 pages_prepared.select("url_norm", "url", "warc_ts", "html"), "url_norm", "inner"
             )
 
-            import time as _time
-
-            timing_on = os.environ.get("FRONTIER_TIMING")
-            phases: dict[str, float] = {}
+            # phase walls (s), stored in the snapshot's trace by the commit
+            trace: dict[str, float] = {}
 
             def _mark(name: str, t0: float) -> float:
-                t = _time.perf_counter()
-                phases[name] = round(t - t0, 2)
+                t = time.perf_counter()
+                trace[name] = round(t - t0, 2)
                 return t
 
-            _t = _time.perf_counter()
+            _t = time.perf_counter()
 
             # 5. process fetched pages (extraction pipeline; idx_id from page
             # identity). In the broadcast-fetch regime the join output inherits
@@ -490,7 +487,7 @@ class FrontierEngine:
                     ({"shard_id": int(r["shard_id"]), "scheduled": r["n"]} for r in shard_fut.result()),
                     key=lambda d: d["shard_id"],
                 )
-            _t = _mark("counters_lineage_job", _t)
+            _mark("counters_lineage_job", _t)
 
             n_fetched = status_counts.get(("fetched", round_no), 0)
             n_missing = status_counts.get(("missing", round_no), 0)
@@ -564,12 +561,9 @@ class FrontierEngine:
                 carry_tables=["robots"],
                 counters=counters,
                 lineage=lineage,
+                trace=trace,
                 note=f"round-{round_no}",
             )
-            _mark("commit_writes", _t)
-            if timing_on:
-                print(f"[frontier-timing] round {round_no}: {phases}", flush=True)
-                counters["phases"] = phases  # machine-readable (scaling harness)
             return counters
         finally:
             for df in caches:
@@ -577,11 +571,11 @@ class FrontierEngine:
 
     # ------------------------------------------------------------- loop
 
-    def run(self, pages: DataFrame, n_rounds: int, round_seconds: int = politeness.ROUND_SECONDS) -> list[dict]:
+    def run(self, pages: DataFrame, n_rounds: int) -> list[dict]:
         pages_prepared = pipeline.dedup_newest(pipeline.canonicalized(pages)).persist()
         out = []
         for _ in range(n_rounds):
-            out.append(self.run_round(pages_prepared, round_seconds))
+            out.append(self.run_round(pages_prepared))
         pages_prepared.unpersist()
         return out
 

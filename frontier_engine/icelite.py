@@ -14,7 +14,8 @@ Commit protocol (single-writer, crash-safe; ``commit`` is the only writer
 of a snapshot's tables):
   1. write each table's parquet under  data/<table>/snap-<id>/   (Spark
      writer; _SUCCESS marker closes the files),
-  2. write  metadata/snap-<id>.json.tmp  (tables, counters, lineage, parent)
+  2. write  metadata/snap-<id>.json.tmp  (tables, counters, trace, lineage,
+     parent)
      and atomically  rename → snap-<id>.json,
   3. write  metadata/current.json.tmp  and atomically rename over
      current.json  — THE commit point; a crash before it leaves the
@@ -178,6 +179,7 @@ class IceLite:
         lineage: Optional[list[dict]] = None,
         carry_tables: Optional[list[str]] = None,
         append_tables: Optional[dict[str, DataFrame]] = None,
+        trace: Optional[dict] = None,
         note: str = "",
     ) -> int:
         """Atomically commit a new snapshot; writes every table of ``tables``
@@ -191,6 +193,9 @@ class IceLite:
                             (manifest points at the parent's files; no IO).
         ``counters``      — round metrics (fetched/skipped/dup…, north_rule).
         ``lineage``       — per-partition provenance rows.
+        ``trace``         — the writer's phase walls (s); the manifest's
+                            ``trace`` adds ``write_s``, this commit's
+                            table-write wall.
         """
         parent = self.current_snapshot_id()
         snap_id = 0 if parent is None else parent + 1
@@ -209,9 +214,11 @@ class IceLite:
         # point, leaving orphan files inert.
         appends = append_tables or {}
         jobs = {**tables, **appends}
+        t0 = time.perf_counter()
         with ThreadPoolExecutor(max_workers=min(12, max(1, len(jobs)))) as pool:
             futs = {name: pool.submit(self.write_table, name, df, snap_id) for name, df in jobs.items()}
         written = {name: fut.result() for name, fut in futs.items()}
+        write_s = round(time.perf_counter() - t0, 2)
         for name, path in written.items():
             if name in appends:
                 prev = parent_tables.get(name, [])
@@ -256,6 +263,7 @@ class IceLite:
             "tables": manifest_tables,
             "stats": stats,
             "counters": counters or {},
+            "trace": {**(trace or {}), "write_s": write_s},
             "lineage": lineage or [],
         }
         mpath = self._meta_path(snap_id)

@@ -9,7 +9,8 @@ jobs"):
         --rounds 2 --seeds 2000 --budget 100
 
 Also runnable as plain ``python -m frontier_engine.jobs.frontier_job``
-(builds its own local session). Prints one JSON line with counters,
+(builds its own local session). Prints one JSON line with counters (each
+round's with ``phases``, the phase walls of its snapshot trace),
 wall-clock, and URLs/sec — the scaling harness (BENCH/run_scaling.py)
 invokes this at two parallelism levels and reports efficiency.
 """
@@ -48,9 +49,6 @@ def main() -> None:
 
     from frontier_engine import pipeline, politeness
     from frontier_engine.frontier import FrontierEngine
-
-    import os as _os
-    import sys as _sys
 
     _setup: dict[str, float] = {}
 
@@ -109,12 +107,13 @@ def main() -> None:
     if not eng.initialized():
         eng.init(seeds, robots)
     _t = _lap("init_commit", _t)
-    if _os.environ.get("FRONTIER_TIMING"):
-        print(f"[frontier-setup] {_setup}", file=_sys.stderr, flush=True)
 
     t0 = time.perf_counter()
     counters = [eng.run_round(prepared) for _ in range(args.rounds)]
     sec = time.perf_counter() - t0
+    # each round's phase walls, from its snapshot's trace
+    for c, snap in zip(counters, eng.store.snapshots()[-args.rounds:]):
+        c["phases"] = snap["trace"]
     urls = sum(c["scheduled"] + c["fetched"] for c in counters)
     print(
         json.dumps(

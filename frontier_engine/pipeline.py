@@ -140,8 +140,7 @@ def dedup_newest(df: DataFrame, key: str = "url_norm") -> DataFrame:
     )
 
 
-def make_process_udf(id_prefix: str, max_payload_size: int = oracle.MAX_DOCUMENT_SIZE,
-                     trust_http_content_type: bool = False):
+def make_process_udf(id_prefix: str):
     """One Arrow-batched kernel call per row-batch: the full reference
     lifecycle (decode → predicates → extract → project), process.py:131-306."""
 
@@ -178,9 +177,7 @@ def make_process_udf(id_prefix: str, max_payload_size: int = oracle.MAX_DOCUMENT
                 ts,
                 bytes(html),
                 id_prefix=id_prefix,
-                max_payload_size=max_payload_size,
                 always_index_meta=True,  # meta struct always filled; kept/dropped downstream
-                trust_http_content_type=trust_http_content_type,
             )
             m = r.meta or {}
             p = r.payload or {}
@@ -196,10 +193,10 @@ def make_process_udf(id_prefix: str, max_payload_size: int = oracle.MAX_DOCUMENT
     return _process
 
 
-def processed(df: DataFrame, id_prefix: str = "synth", **kw) -> DataFrame:
+def processed(df: DataFrame, id_prefix: str = "synth") -> DataFrame:
     """pages (canonicalized, deduped) → one row per doc with `doc` struct,
     in the input's partitioning."""
-    udf = make_process_udf(id_prefix, **kw)
+    udf = make_process_udf(id_prefix)
     # cast: parquet written by pyarrow is TIMESTAMP_NTZ; session TZ is UTC,
     # so the cast to (LTZ) timestamp is exact
     return df.withColumn(

@@ -33,6 +33,8 @@ from pyspark.sql.window import Window
 
 DEFAULT_BUDGET = 10
 ROUND_SECONDS = 300  # nominal round wall-clock for crawl-delay budgeting
+# rows per host kept ahead of the PQ stage, as a multiple of the budget
+PRECAP_FACTOR = 4
 
 
 # ---------------------------------------------------------------- robots
@@ -131,9 +133,9 @@ def apply_robots_gate(candidates: DataFrame, robots: DataFrame) -> DataFrame:
 
 # ---------------------------------------------------------------- scheduler
 
-def effective_budget(budget: int, crawl_delay: float | None, round_seconds: int = ROUND_SECONDS) -> int:
+def effective_budget(budget: int, crawl_delay: float | None) -> int:
     if crawl_delay and crawl_delay > 0:
-        return max(1, min(budget, int(round_seconds // crawl_delay)))
+        return max(1, min(budget, int(ROUND_SECONDS // crawl_delay)))
     return budget
 
 
@@ -143,18 +145,13 @@ SCHEDULE_EXTRA = [
 ]
 
 
-def schedule_hosts(
-    candidates: DataFrame,
-    budget: int = DEFAULT_BUDGET,
-    round_seconds: int = ROUND_SECONDS,
-    precap_factor: int = 4,
-) -> DataFrame:
+def schedule_hosts(candidates: DataFrame, budget: int = DEFAULT_BUDGET) -> DataFrame:
     """Per-host priority-queue scheduling via groupBy(host).applyInPandas.
 
     Adds ``seq`` (1-based per-host fetch order; 0 for unscheduled) and
     ``scheduled``. Requires columns host, priority, idx_id, crawl_delay.
 
-    Skew containment: rows per host are pre-capped to budget*precap_factor
+    Skew containment: rows per host are pre-capped to budget*PRECAP_FACTOR
     with an exact deterministic window top-k BEFORE grouping, so no pandas
     group ever materializes a hot host's full candidate set; the PQ then
     applies the crawl-delay-adjusted effective budget.
@@ -162,7 +159,7 @@ def schedule_hosts(
     w = Window.partitionBy("host").orderBy(F.col("priority").desc(), F.col("idx_id").asc())
     capped = (
         candidates.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") <= budget * precap_factor)
+        .where(F.col("_rn") <= budget * PRECAP_FACTOR)
         .drop("_rn")
     )
     out_schema = T.StructType(list(capped.schema.fields) + SCHEDULE_EXTRA)
@@ -172,7 +169,7 @@ def schedule_hosts(
         cds = pdf["crawl_delay"].dropna()
         if len(cds):
             delay = float(cds.iloc[0])
-        b = effective_budget(budget, delay, round_seconds)
+        b = effective_budget(budget, delay)
         heap = [(-float(p), str(i), pos) for pos, (p, i) in enumerate(zip(pdf["priority"], pdf["idx_id"]))]
         heapq.heapify(heap)
         seq = pd.Series(0, index=pdf.index, dtype="int32")
@@ -189,13 +186,12 @@ def schedule_hosts(
     return capped.groupBy("host").applyInPandas(pq, out_schema)
 
 
-def schedule_window(candidates: DataFrame, budget: int = DEFAULT_BUDGET,
-                    round_seconds: int = ROUND_SECONDS) -> DataFrame:
+def schedule_window(candidates: DataFrame, budget: int = DEFAULT_BUDGET) -> DataFrame:
     """Pure-Catalyst oracle for ``schedule_hosts`` (no crawl-delay-free
     difference: same effective budget math, expressed as a window cap)."""
     eff = F.when(
         F.col("crawl_delay").isNotNull() & (F.col("crawl_delay") > 0),
-        F.greatest(F.lit(1), F.least(F.lit(budget), F.floor(F.lit(round_seconds) / F.col("crawl_delay")).cast("int"))),
+        F.greatest(F.lit(1), F.least(F.lit(budget), F.floor(F.lit(ROUND_SECONDS) / F.col("crawl_delay")).cast("int"))),
     ).otherwise(F.lit(budget))
     w = Window.partitionBy("host").orderBy(F.col("priority").desc(), F.col("idx_id").asc())
     rn = F.row_number().over(w)

@@ -681,7 +681,11 @@ def minhash_signature(spark, sf_dir):
     their source row all along. The token array is aliased in its own
     projection so CollapseProject cannot inline the (expensive) split 4×.
     The non-null filter reproduces explode's drop of null token arrays
-    (split of a non-null string is never null/empty)."""
+    (split of a non-null string is never null/empty).
+
+    Requires ``doc_id`` to be unique in ``documents``: each input row yields
+    its own signature row, where a GROUP BY doc_id (the oracle's shape)
+    would merge the tokens of rows sharing an id into one signature."""
     d = load_wide(spark, sf_dir, "documents")
     toks = d.where(F.col("text").isNotNull()).select(
         "doc_id",

@@ -210,6 +210,25 @@ class TestFrontierRounds:
         pruned = statless.read(spark, "frontier_log", prune=("round", k, k))
         assert len(pruned.inputFiles()) == 1
 
+    def test_snapshots_record_trace(self, run3):
+        """Every commit records its table-write wall in the manifest's
+        trace, and every round also its phase walls, with no switch set."""
+        eng, _ = run3
+        snaps = eng.store.snapshots()
+        rounds = [s for s in snaps if s["note"].startswith("round-")]
+        assert snaps[0]["note"] == "init" and set(snaps[0]["trace"]) == {"write_s"}
+        assert len(rounds) == 3
+        for s in rounds:
+            assert set(s["trace"]) == {"schedule_fetch_extract", "counters_lineage_job", "write_s"}
+        assert all("write_s" in s["trace"] for s in snaps)
+        assert all(v >= 0 for s in snaps for v in s["trace"].values())
+
+    def test_bloom_bits_not_multiple_of_8_rejected(self, spark, tmp_path):
+        root = tmp_path / "bad_bits"
+        with pytest.raises(ValueError, match="multiple of 8"):
+            FrontierEngine(spark, str(root), n_shards=8, bloom_bits=1003, budget=5)
+        assert not root.exists()
+
     def test_lineage_recorded(self, run3):
         eng, _ = run3
         snaps = eng.store.snapshots()

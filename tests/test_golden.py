@@ -25,7 +25,8 @@ def golden():
 
 
 # {known filter} × {fetch join}: each "bloom"/"shuffle" regime is forced by
-# dropping its row gate to 0.
+# dropping its row gate to 0. known_broadcast × fetch_shuffle is reachable
+# only that way: scheduled ≤ pending_in ≤ known rows ≤ 1 M < 8 M.
 REGIMES = [
     ("broadcast", "broadcast"),
     ("bloom", "broadcast"),

@@ -114,6 +114,25 @@ class TestUrlSeen:
         got = sorted(r.url_norm for r in out.collect())
         assert got == sorted(all_urls[120:])  # exact: no FPs survive, no FNs dropped
 
+    def test_bits_not_multiple_of_8_rejected(self, spark):
+        """A bitmap is stored packed: a size that bytes cannot hold exactly
+        would be probed modulo a different size than it was built with."""
+        h = self._hashed(spark, ["http://r.com/1"])
+        for bad in (1003, 0, -8):
+            with pytest.raises(ValueError, match="multiple of 8"):
+                urlseen.build_shards(h, self.N_SHARDS, bad)
+            with pytest.raises(ValueError, match="multiple of 8"):
+                urlseen.extend_shards(None, h, self.N_SHARDS, bad)
+
+    def test_duplicate_shard_rows_raise(self, spark):
+        """A shard table holding one shard_id twice would probe only one of
+        its bitmaps; the membership test refuses it with a real error."""
+        h = self._hashed(spark, [f"http://d.com/{i}" for i in range(50)])
+        shards = urlseen.build_shards(h, self.N_SHARDS, self.M_BITS)
+        doubled = shards.unionByName(shards)
+        with pytest.raises(Exception, match="RuntimeError: duplicate urlseen shard rows"):
+            urlseen.mark_maybe_seen(h, doubled, self.N_SHARDS).collect()
+
     def test_empty_shards_all_unseen(self, spark):
         cand = self._hashed(spark, ["http://q.com/1", "http://q.com/2"])
         shards = spark.createDataFrame([], urlseen.SHARD_SCHEMA)
@@ -188,7 +207,7 @@ class TestScheduler:
         cand = self._cands(spark).withColumn(
             "crawl_delay", F.when(F.col("host") == "h2.com", 100.0)
         )
-        out = politeness.schedule_hosts(cand, budget=7, round_seconds=300).where(F.col("scheduled"))
+        out = politeness.schedule_hosts(cand, budget=7).where(F.col("scheduled"))
         per_host = {r.host: r.n for r in out.groupBy("host").agg(F.count("*").alias("n")).collect()}
         assert per_host["h2.com"] == 3
         assert per_host["h0.com"] == 7
