@@ -22,10 +22,7 @@ aggregations + one broadcast join — no UDFs anywhere.
 
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import Column, DataFrame, functions as F, types as T
-from pyspark.sql.window import Window
 
 # FULL host stopword list — all 256 entries of the reference's
 # host_stop_filter (data_index.py:385-645), verbatim: generic TLDs + every
@@ -146,48 +143,6 @@ def bm25_scores(
         )
     )
     return scored.groupBy("doc_id").agg(F.sum("term_score").alias("bm25"))
-
-
-def lm_dirichlet_scores(
-    docs: DataFrame,
-    query_terms: list[str],
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    mu: float = 2000.0,
-) -> DataFrame:
-    """LM-Dirichlet similarity of the legacy v1 index
-    (create_index_kibana.txt:7-17): score = Σ_t log(1 + tf/(mu·P(t|C))) +
-    |q|·log(mu/(|d|+mu)), over matched terms."""
-    toks = docs.select(
-        F.col(id_col).alias("doc_id"), F.explode(text_tokens(F.col(text_col))).alias("term")
-    )
-    dl = toks.groupBy("doc_id").agg(F.count(F.lit(1)).alias("dl"))
-    # Σ dl ≡ token count; one agg action instead of a second full toks scan
-    total_terms = int(dl.agg(F.sum("dl")).collect()[0][0] or 1)
-    qt = [t.lower() for t in query_terms]
-    cf = toks.where(F.col("term").isin(qt)).groupBy("term").agg(F.count(F.lit(1)).alias("cf"))
-    tf = (
-        toks.where(F.col("term").isin(qt))
-        .groupBy("doc_id", "term")
-        .agg(F.count(F.lit(1)).alias("tf"))
-    )
-    scored = (
-        tf.join(F.broadcast(cf), "term")
-        .join(F.broadcast(dl), "doc_id")
-        .withColumn(
-            "term_score",
-            F.log(F.lit(1.0) + F.col("tf") * F.lit(float(total_terms)) / (F.lit(mu) * F.col("cf"))),
-        )
-    )
-    norm = dl.select(
-        "doc_id", (F.lit(float(len(qt))) * F.log(F.lit(mu) / (F.col("dl") + mu))).alias("norm")
-    )
-    return (
-        scored.groupBy("doc_id")
-        .agg(F.sum("term_score").alias("s"))
-        .join(norm, "doc_id")
-        .select("doc_id", (F.col("s") + F.col("norm")).alias("lm_score"))
-    )
 
 
 # =====================================================================
@@ -627,12 +582,6 @@ STEM_STEP_FNS: dict[str, list] = {
 # every language with a stemmer stage
 STEMMED_LANGS = sorted(set(STEM_STEP_FNS) | set(EXACT_STEM_SQL))
 
-# every analyzer the reference declares (data_index.py:725-976): langs with
-# a stemmer stage, langs with norm+fold only, and the CJK family (separate
-# bigram tokenizer, see cjk_bigram_tokens)
-PLAIN_LANGS = ["ar", "bg", "cs", "nl", "no", "pl", "da", "th", "fa",
-               "lt", "ro", "tr", "el", "ca"]
-CJK_LANGS = ["zh", "ja", "ko"]
 # french elision articles (ES `elision` filter defaults)
 _ELISION_RE = "^(jusqu|quoiqu|lorsqu|puisqu|qu|[lmtnsjdc])'"  # raw regex; _sq() quotes it
 
@@ -755,34 +704,9 @@ def analyze_text(df: DataFrame, text_col: str, lang_col: str,
     )
 
 
-def cjk_bigram_tokens(text: Column) -> Column:
-    """CJK analyzer stand-in (zh/ja/ko — data_index.py:862-864,928-938,966-976):
-    the smartcn/kuromoji tokenizer jars don't exist in-sandbox, so model the
-    ES `cjk` analyzer's documented behavior: overlapping bigrams over runs
-    of CJK ideographs; non-CJK runs tokenize as words. Pure JVM: regexp
-    run-split + sequence/transform bigramming."""
-    runs = F.filter(
-        F.split(F.lower(text), r"[^\p{L}\p{Nd}]+"), lambda t: F.length(t) > 0
-    )
-    is_cjk = lambda t: t.rlike("^[\\u3040-\\u30ff\\u3400-\\u9fff\\uac00-\\ud7af]+$")
-    return F.flatten(
-        F.transform(
-            runs,
-            lambda t: F.when(~is_cjk(t), F.array(t)).otherwise(
-                F.when(F.length(t) == 1, F.array(t)).otherwise(
-                    F.transform(
-                        F.sequence(F.lit(1), F.length(t) - 1),
-                        lambda i: t.substr(i, F.lit(2)),
-                    )
-                )
-            ),
-        )
-    )
-
-
 # ------------------------------------------------- legacy similarities
 # The legacy ClueWeb index declares six similarities
-# (create_index_kibana.txt:7-39): lmd (LMDirichlet, above), lmj
+# (create_index_kibana.txt:7-39): lmd (LMDirichlet), lmj
 # (LMJelinekMercer), dfr (DFR basic_model=g after_effect=l
 # normalization=h2), dfi (DFI chisquared), ib (IB spl/ttf/h2) and a
 # scripted TF-IDF. Each is the published Lucene formula computed from
@@ -830,7 +754,7 @@ def lmj_lmd_scores(docs, query_terms, id_col="doc_id", text_col="text",
     """LMJelinekMercer + LMDirichlet in ONE pass (the dfi_ib fusion
     pattern): both language models share the same (tf, dl, ts) stats.
     LMDirichlet = Σ_t ln(1 + tf·total/(mu·ttf)) + |q|·ln(mu/(dl+mu))
-    (matches ``lm_dirichlet_scores``, cf ≡ ttf). Returns
+    over matched terms (create_index_kibana.txt:7-17). Returns
     (doc_id, lmj, lmd) for docs matching ≥1 query term."""
     tf, dl, ts, _, _, total = _term_stats(docs, query_terms, id_col, text_col)
     lmj_s = F.log(

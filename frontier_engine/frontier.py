@@ -136,19 +136,32 @@ def candidates_from_urls(df: DataFrame, round_no: int, id_prefix: str,
 
     ``resolve_base_col``: if set, ``url`` holds raw hrefs resolved against
     this base-URL column first (link discovery path); seeds pass no base.
+    An href that cannot be resolved (``urljoin`` raises ``ValueError``, e.g.
+    ``http://[::1/x``) and a null url yield a null url_norm, and that row is
+    dropped before the dedup: one bad link on a page must not fail the round.
     """
 
     @F.pandas_udf("url_norm string, host string, idx_id string")
     def _canon_id(base: pd.Series, href: pd.Series) -> pd.DataFrame:
         from urllib.parse import urljoin
 
+        def resolve(b, h):
+            if b is None or h is None:
+                return h
+            try:
+                return urljoin(b, h)
+            except ValueError:
+                return None
+
         resolved = pd.Series(
-            [urljoin(b, h) if b is not None and h is not None else h for b, h in zip(base, href)],
-            index=href.index, dtype="object",
+            [resolve(b, h) for b, h in zip(base, href)], index=href.index, dtype="object"
         )
         urls_norm = canonicalize_series(resolved)
         ids = []
         for u in urls_norm:
+            if u is None:
+                ids.append(None)
+                continue
             src, off = derive_source(u)
             ids.append(index_uuid(round_no * 1000, off, src, webis_uuid(id_prefix, u)))
         return pd.DataFrame(
@@ -156,8 +169,11 @@ def candidates_from_urls(df: DataFrame, round_no: int, id_prefix: str,
         )
 
     base = F.col(resolve_base_col) if resolve_base_col else F.lit(None).cast("string")
+    # marked nondeterministic only so Catalyst cannot push the null filter
+    # below the UDF, which would evaluate the UDF twice (once per side)
     out = (
-        df.withColumn("_ci", _canon_id(base, F.col("url")))
+        df.withColumn("_ci", _canon_id.asNondeterministic()(base, F.col("url")))
+        .where(F.col("_ci.url_norm").isNotNull())
         .withColumn("priority", F.coalesce(F.col("priority").cast("double"), F.lit(0.5)))
         # duplicate spellings of one page collapse here; keep max priority
         # (host/idx_id are url_norm-determined → any_value is exact)
@@ -569,15 +585,7 @@ class FrontierEngine:
             for df in caches:
                 df.unpersist()
 
-    # ------------------------------------------------------------- loop
-
-    def run(self, pages: DataFrame, n_rounds: int) -> list[dict]:
-        pages_prepared = pipeline.dedup_newest(pipeline.canonicalized(pages)).persist()
-        out = []
-        for _ in range(n_rounds):
-            out.append(self.run_round(pages_prepared))
-        pages_prepared.unpersist()
-        return out
+    # ------------------------------------------------------------- reads
 
     def schedule_table(self) -> Optional[DataFrame]:
         return self._read("schedule")

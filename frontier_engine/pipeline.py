@@ -95,16 +95,6 @@ PAYLOAD_COLUMNS = [
 
 # ---------------------------------------------------------------- stages
 
-def partition_by_doc_id(df: DataFrame, n: int, id_col: str = "idx_id") -> DataFrame:
-    """Range-partition output docs by document id — the reference's
-    ``uuid_prefix_partitioner`` (index.py:50-51: partition = uuid_int·n/16³²)
-    as ``repartitionByRange``; b64-encoded UUIDs sort like their bytes, so
-    ranges of idx_id ≈ ranges of (time, offset). Combined with
-    ``sortWithinPartitions`` this reproduces the sink's sorted insertion
-    order (es_sink.py:155) with globally ordered files."""
-    return df.repartitionByRange(n, F.col(id_col)).sortWithinPartitions(id_col)
-
-
 def canonicalized(df: DataFrame) -> DataFrame:
     """Add url_norm / host / url_hash.
 

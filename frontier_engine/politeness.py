@@ -18,8 +18,8 @@ Two implementations are provided and cross-checked in tests:
 
 Hot-host skew: a giant host is a giant group. Before the PQ stage the
 pipeline caps rows per group with the window variant (exact top-k per
-host, deterministic), so the applyInPandas group size is ≤ budget — the
-SURVEY.md §7.4.5 pre-aggregation strategy.
+host, deterministic), so the applyInPandas group size is ≤ budget ×
+``PRECAP_FACTOR`` — the SURVEY.md §7.4.5 pre-aggregation strategy.
 """
 
 from __future__ import annotations
@@ -47,12 +47,15 @@ class RobotsRules:
 
 def parse_robots(robots_txt: str | None) -> RobotsRules:
     """Parse the ``User-agent: *`` group of a robots.txt (Allow / Disallow /
-    Crawl-delay). Unknown lines ignored; absent file ⇒ allow-all."""
+    Crawl-delay). Consecutive ``User-agent`` lines open one group (RFC 9309
+    §2.1), so ``*`` anywhere in the run applies the group's rules. Unknown
+    lines ignored; absent file ⇒ allow-all."""
     out = RobotsRules()
     if not robots_txt:
         return out
     applies = False
     seen_any_group = False
+    in_agents = False  # the previous rule line was a User-agent line
     for raw in robots_txt.splitlines():
         line = raw.split("#", 1)[0].strip()
         if not line or ":" not in line:
@@ -61,9 +64,10 @@ def parse_robots(robots_txt: str | None) -> RobotsRules:
         key = key.strip().lower()
         val = val.strip()
         if key == "user-agent":
-            applies = val == "*"
-            seen_any_group = True
+            applies = (applies and in_agents) or val == "*"
+            seen_any_group = in_agents = True
             continue
+        in_agents = False
         if not applies and seen_any_group:
             continue
         if key == "disallow":

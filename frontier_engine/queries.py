@@ -13,8 +13,8 @@ value hash at sf0.01):
   ``('0x'||substr(md5(x),1,8))::bigint``).
 
 Queries whose semantics are not SQL-expressible (bloom state, frontier
-round, multimodal plumbing) are registered without an oracle — the driver
-records a rows-only check and the pytest suite carries their correctness.
+round) are registered without an oracle — the driver records a rows-only
+check and the pytest suite carries their correctness.
 """
 
 from __future__ import annotations
@@ -1656,21 +1656,23 @@ def frontier_round_demo(spark, sf_dir):
     pages = spark.createDataFrame(pdf)
     seeds = spark.createDataFrame(synth.generate_seeds(pdf, n_seeds=30))
     robots = spark.createDataFrame(synth.generate_robots(pdf))
+    prepared = pl.dedup_newest(pl.canonicalized(pages)).persist()
     store_dir = tempfile.mkdtemp(prefix="fr_demo_")
     try:
         eng = FrontierEngine(
             spark, store_dir, n_shards=8, bloom_bits=1 << 16, budget=5
         )
         eng.init(seeds, robots)
-        eng.run_round(pl.dedup_newest(pl.canonicalized(pages)).persist())
+        eng.run_round(prepared)
         sched = eng.schedule_table().orderBy("round", "host", "seq")
-        # materialize the (tiny, budget-bounded) schedule so the store dir
-        # can be removed NOW — returning a lazy frame over the store leaked
-        # one fr_demo_* dir per driver evaluation (VERDICT r3 wrong #3)
+        # materialize the (tiny, budget-bounded) schedule so the cached
+        # pages and the store dir can be released NOW: a lazy frame over
+        # them would leak one cache and one fr_demo_* dir per evaluation
         rows, schema = sched.collect(), sched.schema
     finally:
         import shutil
 
+        prepared.unpersist()
         shutil.rmtree(store_dir, ignore_errors=True)
     return spark.createDataFrame(rows, schema)
 

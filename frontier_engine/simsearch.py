@@ -1,14 +1,11 @@
 """Similarity search over embedding columns (training-data pipeline op).
 
 All math is JVM-side (``zip_with``/``aggregate`` — whole-stage-codegen'd,
-no Python in the hot path). Brute-force cosine is the baseline; two scale
-paths are provided:
-
-- ``topk_per_bucket``  — IVF-style: partition by a coarse bucket column
-  (centroid / label), window top-k inside each (one shuffle on bucket).
-- ``lsh_sign_buckets`` — random-hyperplane LSH: sign-bit sketch from fixed
-  deterministic pseudo-planes (md5-seeded), bucket-join candidates instead
-  of the O(n²) cross product.
+no Python in the hot path). Brute-force cosine is the baseline; the scale
+path is an IVF probe over a Lloyd's k-means coarse quantizer
+(``kmeans_lloyd`` + ``ivf_probe_cluster``). ``lsh_sign_buckets_df`` is a
+random-hyperplane sign-bit sketch from fixed deterministic pseudo-planes
+(md5-seeded).
 
 At 100 TB the broadcast side is the query set (queries ≪ corpus): cosine
 against each query is a broadcast nested loop over corpus partitions, which
@@ -49,12 +46,6 @@ def cosine_to_query(
     return joined.select(
         *cols, F.round(cosine_col(F.col("embedding"), F.col("qv")), digits).alias("cos")
     )
-
-
-def topk_per_bucket(scored: DataFrame, bucket_col: str, k: int) -> DataFrame:
-    """Exact top-k inside each coarse bucket (IVF probe stage)."""
-    w = Window.partitionBy(bucket_col).orderBy(F.col("cos").desc(), F.col("vec_id").asc())
-    return scored.withColumn("rn", F.row_number().over(w)).where(F.col("rn") <= k).drop("rn")
 
 
 def lsh_sign_buckets_df(emb: DataFrame, n_bits: int = 8, dim: int = 64) -> DataFrame:
@@ -202,15 +193,3 @@ def ivf_probe_cluster(query: DataFrame, cent: DataFrame, nprobe: int = 1) -> Dat
     )
     w = Window.orderBy("d2", "cluster")
     return d2.withColumn("rn", F.row_number().over(w)).where(F.col("rn") <= nprobe).select("cluster")
-
-
-def ann_lsh_candidates(emb: DataFrame, query: DataFrame, n_bits: int = 8, dim: int = 64) -> DataFrame:
-    """LSH-bucketed ANN: corpus and query sketched with the same planes;
-    candidates = bucket-equality join (broadcast on the query side)."""
-    corpus_b = lsh_sign_buckets_df(emb, n_bits, dim).join(emb, "vec_id")
-    query_b = lsh_sign_buckets_df(
-        query.select(F.col("qv").alias("embedding")).withColumn("vec_id", F.lit(-1)), n_bits, dim
-    ).select(F.col("bucket").alias("qbucket"))
-    return corpus_b.join(
-        F.broadcast(query_b), F.col("bucket") == F.col("qbucket"), "inner"
-    ).drop("qbucket")

@@ -9,9 +9,7 @@ no external data, no network:
   byte-identity targets. Hosts are Zipf-distributed (hot-domain skew), URLs
   include non-canonical spellings, and every reference skip-predicate
   (SURVEY.md §2.2) has dedicated edge rows.
-- ``seeds(url, priority)``, ``robots(host, robots_txt)``,
-  ``spam_ranks.txt`` / ``page_ranks.txt`` rank files (ClueWeb-style lines,
-  process.py:477-506, incl. malformed lines that must be dropped).
+- ``seeds(url, priority)`` and ``robots(host, robots_txt)``.
 
 Pages link to each other via <a href> so the frontier discovers new URLs
 each round.

@@ -8,8 +8,9 @@ with engine-owned distributed state:
 - hash space is sharded by ``pmod(url_hash, n_shards)``; each shard is an
   independent bloom bitmap built/merged per-group via ``applyInPandas``
   (state size ∝ shards × bitmap, not ∝ rows seen),
-- membership is a broadcast join of the (small) shard table onto candidates
-  + a vectorized numpy bit-test in ``mapInPandas``,
+- membership cogroups candidates with the shard table on ``shard_id`` and
+  runs a vectorized numpy bit-test in ``applyInPandas`` (each bitmap ships
+  once per group, never once per candidate row),
 - bloom "maybe-seen" hits get an exact ``left_anti`` pass against the known
   table: the bloom gives no-false-negative *pruning*, the anti join removes
   the false positives (SURVEY.md §2.3).

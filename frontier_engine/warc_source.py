@@ -166,13 +166,6 @@ def stream_member_offsets(f, chunk_size: int = 4 << 20) -> list[int]:
     return offs
 
 
-def member_offsets(data: bytes) -> list[int]:
-    """Split-point index for one in-memory WARC buffer (the reference's
-    restriction tracker bootstrap, warcio.py:72-80). Thin wrapper over the
-    streaming indexer."""
-    return stream_member_offsets(io.BytesIO(data))
-
-
 def parse_warc_stream(data: bytes, source_file: str, max_payload: Optional[int] = None,
                       offset_bias: int = 0):
     """Iterate WARC records from (possibly gzip'd) bytes.

@@ -407,6 +407,41 @@ class TestFrontierRounds:
         assert counters["skipped_robots"] > 0
         assert sum(int(n) for n in log.read_text().split()) == counters["pending_in"]
 
+    def test_unresolvable_href_dropped_not_fatal(self, spark, tmp_path):
+        """``urljoin`` raises on ``http://[::1/x`` ("Invalid IPv6 URL"). A
+        fetched page linking to it still commits its round: the bad href is
+        dropped and the page's valid link is admitted."""
+        html = (
+            "<html><head><title>t</title></head><body><p>" + "Some text. " * 50 + "</p>"
+            '<a href="http://[::1/x">bad</a> <a href="/ok.html">ok</a></body></html>'
+        ).encode()
+        pages = spark.createDataFrame(pd.DataFrame(
+            {"url": ["http://a.com/"], "warc_ts": [pd.Timestamp("2021-03-01")], "html": [html]}
+        ))
+        seeds = spark.createDataFrame(pd.DataFrame({"url": ["http://a.com/"], "priority": [1.0]}))
+        robots = spark.createDataFrame(pd.DataFrame({"host": ["a.com"], "robots_txt": [""]}))
+        eng = _mk_engine(spark, tmp_path, "bad_href")
+        sid = eng.init(seeds, robots)
+        counters = eng.run_round(pipeline.dedup_newest(pipeline.canonicalized(pages)))
+        assert eng.store.current_snapshot_id() == sid + 1
+        assert counters["fetched"] == 1 and counters["discovered_new"] == 1
+        pending = [r.url_norm for r in eng.store.read(spark, "frontier_pending").collect()]
+        assert pending == ["http://a.com/ok.html"]
+        # dropping the nulls must not evaluate the resolve UDF a second time
+        links = spark.createDataFrame([("http://a.com/", "/ok.html", 0.5)],
+                                      "base_url string, url string, priority double")
+        cand = frontier.candidates_from_urls(links, 1, "synth", resolve_base_col="base_url")
+        assert cand._jdf.queryExecution().executedPlan().toString().count("ArrowEvalPython") == 1
+
+    def test_round_demo_releases_its_cache(self, spark):
+        """The catalog's ``frontier_round_demo`` leaves no cached frame
+        behind after an evaluation."""
+        from frontier_engine import queries
+
+        cached_before = spark.sparkContext._jsc.getPersistentRDDs().size()
+        assert queries.REGISTRY["frontier_round_demo"][0](spark, None).count() > 0
+        assert spark.sparkContext._jsc.getPersistentRDDs().size() == cached_before
+
 
 class TestResumeDeterminism:
     def test_resume_identical_schedule(self, spark, tmp_path, crawl_inputs):

@@ -160,6 +160,13 @@ class TestRobots:
         assert politeness.robots_allowed(r, "/a") is True
         assert politeness.robots_allowed(r, "/tmp/a") is False
 
+    @pytest.mark.parametrize("agents", ["*\nUser-agent: googlebot", "googlebot\nUser-agent: *"])
+    def test_consecutive_agents_share_group(self, agents):
+        # RFC 9309 §2.1: consecutive User-agent lines head one group
+        r = politeness.parse_robots(f"User-agent: {agents}\nDisallow: /x\n")
+        assert politeness.robots_allowed(r, "/x/1") is False
+        assert politeness.robots_allowed(r, "/y") is True
+
     def test_gate_dataframe(self, spark):
         cand = spark.createDataFrame(
             [("h1.com", "http://h1.com/private/x"), ("h1.com", "http://h1.com/ok"),
@@ -290,16 +297,3 @@ class TestMaintenanceAndPartitioning:
         assert expired == [0, 1, 2, 3]
         assert not os.path.exists(paths[0]) and os.path.exists(paths[5])
         assert store.read(spark, "v").count() == 6  # current snapshot intact
-
-    def test_partition_by_doc_id_globally_sorted(self, spark):
-        from frontier_engine.pipeline import partition_by_doc_id
-
-        df = spark.createDataFrame([(f"id{i:04d}",) for i in range(100, 0, -1)], "idx_id string")
-        out = partition_by_doc_id(df, 4)
-        assert out.rdd.getNumPartitions() == 4
-        # range partitioning + within-partition sort = globally sorted files
-        per_part = out.rdd.mapPartitionsWithIndex(
-            lambda i, it: [(i, [r.idx_id for r in it])]
-        ).collect()
-        flat = [x for _, part in sorted(per_part) for x in part]
-        assert flat == sorted(flat)
