@@ -84,7 +84,7 @@ from frontier_engine import pipeline, politeness, urlseen
 from frontier_engine.icelite import IceLite
 from frontier_engine.identity import index_uuid, webis_uuid
 from frontier_engine.oracle import derive_source
-from frontier_engine.urlnorm import canonicalize_series, host_series
+from frontier_engine.urlnorm import canonicalize_url, host_series
 
 FRONTIER_SCHEMA = T.StructType(
     [
@@ -110,8 +110,8 @@ _FETCH_BROADCAST_ROWS = 8_000_000
 
 def _known_rows(snap: dict) -> Optional[int]:
     """Rows of ``frontier_known`` summed from the manifest's per-file row
-    stats, or None when any of its dirs has none (stores written before the
-    table declared stats)."""
+    stats, or None when any of its dirs has none (a store written before
+    every table had stats)."""
     dirs = snap["tables"]["frontier_known"]
     stats = snap.get("stats", {}).get("frontier_known", {})
     if not set(dirs) <= {os.path.dirname(f) for f in stats}:
@@ -136,27 +136,29 @@ def candidates_from_urls(df: DataFrame, round_no: int, id_prefix: str,
 
     ``resolve_base_col``: if set, ``url`` holds raw hrefs resolved against
     this base-URL column first (link discovery path); seeds pass no base.
-    An href that cannot be resolved (``urljoin`` raises ``ValueError``, e.g.
-    ``http://[::1/x``) and a null url yield a null url_norm, and that row is
-    dropped before the dedup: one bad link on a page must not fail the round.
+    A url that cannot be resolved or parsed (``urljoin`` or ``urlsplit``
+    raises ``ValueError``, e.g. ``http://[::1/x``) and a null url yield a
+    null url_norm, and that row is dropped before the dedup, for seeds as
+    for links: one bad url must not fail a round.
     """
 
     @F.pandas_udf("url_norm string, host string, idx_id string")
     def _canon_id(base: pd.Series, href: pd.Series) -> pd.DataFrame:
-        from urllib.parse import urljoin
+        from urllib.parse import urljoin, urlsplit
 
-        def resolve(b, h):
-            if b is None or h is None:
-                return h
+        def canon(b, h):
+            if h is None:
+                return None
             try:
-                return urljoin(b, h)
+                u = canonicalize_url(h if b is None else urljoin(b, h))
+                urlsplit(u)  # the extraction kernel parses every fetched url
+                return u
             except ValueError:
                 return None
 
-        resolved = pd.Series(
-            [resolve(b, h) for b, h in zip(base, href)], index=href.index, dtype="object"
+        urls_norm = pd.Series(
+            [canon(b, h) for b, h in zip(base, href)], index=href.index, dtype="object"
         )
-        urls_norm = canonicalize_series(resolved)
         ids = []
         for u in urls_norm:
             if u is None:
@@ -202,15 +204,7 @@ class FrontierEngine:
     ):
         urlseen.check_bits(bloom_bits)  # before IceLite creates the store dirs
         self.spark = spark
-        # round-keyed append tables declare file stats so readers prune to
-        # the rounds they want (Iceberg manifest min/max semantics); the
-        # known set's per-file row counts size its anti-join gate
-        self.store = IceLite(
-            store_root,
-            stats_columns={
-                "frontier_log": "round", "schedule": "round", "frontier_known": "url_hash",
-            },
-        )
+        self.store = IceLite(store_root)
         self.id_prefix = id_prefix
         self.n_shards = n_shards
         self.bloom_bits = bloom_bits
@@ -574,7 +568,6 @@ class FrontierEngine:
                         pipeline.payload_docs(proc), n_docs_ok, rows_per_part=8192
                     ).sortWithinPartitions("idx_id"),
                 },
-                carry_tables=["robots"],
                 counters=counters,
                 lineage=lineage,
                 trace=trace,

@@ -10,12 +10,19 @@ It replaces the reference's Redis split-range resume cache
 (warcio.py:120-134,172-174): instead of per-split "start:end" records, a
 killed job re-reads the **last committed snapshot** and recomputes nothing.
 
+A manifest records what the writer could derive, as Iceberg table metadata
+and manifests do (https://iceberg.apache.org/spec/): every table of the
+parent that a commit neither replaces nor appends is carried unchanged;
+every table has a schema (``read`` needs no inference job) and per-file
+stats (row count, and min/max of every plain-integer column for pruned
+reads), derived from the DataFrame and the parquet footers.
+
 Commit protocol (single-writer, crash-safe; ``commit`` is the only writer
 of a snapshot's tables):
   1. write each table's parquet under  data/<table>/snap-<id>/   (Spark
      writer; _SUCCESS marker closes the files),
-  2. write  metadata/snap-<id>.json.tmp  (tables, counters, trace, lineage,
-     parent)
+  2. write  metadata/snap-<id>.json.tmp  (tables, schemas, stats, counters,
+     trace, lineage, parent)
      and atomically  rename → snap-<id>.json,
   3. write  metadata/current.json.tmp  and atomically rename over
      current.json  — THE commit point; a crash before it leaves the
@@ -30,13 +37,15 @@ import time
 from concurrent.futures import ThreadPoolExecutor
 from typing import Optional
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 
-def _collect_file_stats(dir_path: str, column: str) -> dict[str, dict]:
-    """Per-file {rows, min, max} for one column from parquet footers (no
-    data scan). A file whose footer lacks stats for the column gets
-    min/max None — the pruned read keeps such files (safe)."""
+def _file_stats(dir_path: str) -> dict[str, dict]:
+    """Per-file ``{rows, bounds}`` of one written dir from its parquet
+    footers (no data scan). ``bounds`` maps each top-level column whose
+    footer values are plain integers (INT32/INT64 with no date, time or
+    decimal logical type; other values do not round-trip through JSON) to
+    its [min, max]; a column missing min/max in any row group gets none."""
     import pyarrow.parquet as pq
 
     out: dict[str, dict] = {}
@@ -45,30 +54,22 @@ def _collect_file_stats(dir_path: str, column: str) -> dict[str, dict]:
             continue
         fp = os.path.join(dir_path, fn)
         md = pq.ParquetFile(fp).metadata
-        lo = hi = None
-        for g in range(md.num_row_groups):
-            rg = md.row_group(g)
-            for i in range(rg.num_columns):
-                c = rg.column(i)
-                if c.path_in_schema != column:
-                    continue
-                st = c.statistics
-                if st is None or not st.has_min_max:
-                    continue
-                lo = st.min if lo is None else min(lo, st.min)
-                hi = st.max if hi is None else max(hi, st.max)
-        out[fp] = {"col": column, "rows": md.num_rows, "min": lo, "max": hi}
+        bounds: dict[str, list] = {}
+        for i in range(md.num_columns):
+            c = md.schema.column(i)
+            plain_int = c.physical_type in ("INT32", "INT64") and c.logical_type.type in ("NONE", "INT")
+            if c.path != c.name or not plain_int:
+                continue
+            sts = [md.row_group(g).column(i).statistics for g in range(md.num_row_groups)]
+            if sts and all(st is not None and st.has_min_max for st in sts):
+                bounds[c.name] = [min(st.min for st in sts), max(st.max for st in sts)]
+        out[fp] = {"rows": md.num_rows, "bounds": bounds}
     return out
 
 
 class IceLite:
-    def __init__(self, root: str, stats_columns: Optional[dict[str, str]] = None):
-        """``stats_columns``: table → column whose per-FILE min/max (plus row
-        count) is recorded in the manifest at commit, Iceberg-manifest style,
-        enabling read-side file pruning (``read(..., prune=...)``). Footer
-        reads only — no data scan."""
+    def __init__(self, root: str):
         self.root = root
-        self.stats_columns = stats_columns or {}
         os.makedirs(os.path.join(root, "metadata"), exist_ok=True)
         os.makedirs(os.path.join(root, "data"), exist_ok=True)
 
@@ -108,11 +109,13 @@ class IceLite:
         """Read a table at a snapshot (default: current). None if absent.
 
         ``prune=(column, lo, hi)``: open ONLY the files whose manifest
-        min/max for ``column`` intersects [lo, hi] (Iceberg file-stats
+        bounds for ``column`` intersect [lo, hi] (Iceberg file-stats
         pruning — the planner never lists, opens, or schedules the skipped
-        files). Files with no recorded stats are always kept, so pruning is
-        safe on mixed tables; it is an IO optimization, not a filter — pair
-        it with the matching ``.where()`` for row-exact results."""
+        files). Files with no recorded bounds for ``column`` are always
+        kept, so pruning is safe on mixed tables; it is an IO optimization,
+        not a filter — pair it with the matching ``.where()`` for row-exact
+        results. The manifest's schema, when recorded, is passed to the
+        reader, so no schema-inference job runs."""
         sid = snapshot_id if snapshot_id is not None else self.current_snapshot_id()
         if sid is None:
             return None
@@ -121,30 +124,27 @@ class IceLite:
         if path is None:
             return None
         dirs = path if isinstance(path, list) else [path]
-        if prune is not None:
-            col, lo, hi = prune
-            stats = snap.get("stats", {}).get(table, {})
-            kept, total = [], 0
-            for d in dirs:
-                for fn in sorted(os.listdir(d)):
-                    if not fn.endswith(".parquet"):
-                        continue
-                    total += 1
-                    fp = os.path.join(d, fn)
-                    s = stats.get(fp)
-                    if (
-                        s is None
-                        or s.get("col") != col
-                        or s.get("min") is None
-                        or s.get("max") is None
-                        or (s["min"] <= hi and s["max"] >= lo)
-                    ):
-                        kept.append(fp)
-            if not kept:
-                # nothing qualifies: preserve the schema, read zero rows
-                return spark.read.parquet(*dirs).limit(0)
-            return spark.read.parquet(*kept)
-        return spark.read.parquet(*dirs)
+        schema = snap.get("schemas", {}).get(table)
+        reader = spark.read
+        if schema is not None:
+            reader = reader.schema(T.StructType.fromJson(json.loads(schema)))
+        if prune is None:
+            return reader.parquet(*dirs)
+        col, lo, hi = prune
+        stats = snap.get("stats", {}).get(table, {})
+        kept = []
+        for d in dirs:
+            for fn in sorted(os.listdir(d)):
+                if not fn.endswith(".parquet"):
+                    continue
+                fp = os.path.join(d, fn)
+                b = stats.get(fp, {}).get("bounds", {}).get(col)
+                if b is None or (b[0] <= hi and b[1] >= lo):
+                    kept.append(fp)
+        if not kept:
+            # nothing qualifies: preserve the schema, read zero rows
+            return reader.parquet(*dirs).limit(0)
+        return reader.parquet(*kept)
 
     # ------------------------------------------------------------ commits
 
@@ -177,20 +177,19 @@ class IceLite:
         tables: dict[str, DataFrame],
         counters: Optional[dict] = None,
         lineage: Optional[list[dict]] = None,
-        carry_tables: Optional[list[str]] = None,
         append_tables: Optional[dict[str, DataFrame]] = None,
         trace: Optional[dict] = None,
         note: str = "",
     ) -> int:
         """Atomically commit a new snapshot; writes every table of ``tables``
-        and ``append_tables`` through ``write_table``.
+        and ``append_tables`` through ``write_table``. Every other table of
+        the parent is carried unchanged (manifest points at the parent's
+        files, with their schema and stats; no IO).
 
         ``tables``        — DataFrames replacing the table in this snapshot.
         ``append_tables`` — DataFrames appended: the manifest entry becomes
                             the parent's file list + this snapshot's files
                             (Iceberg append-snapshot semantics, no rewrite).
-        ``carry_tables``  — tables inherited from the parent unchanged
-                            (manifest points at the parent's files; no IO).
         ``counters``      — round metrics (fetched/skipped/dup…, north_rule).
         ``lineage``       — per-partition provenance rows.
         ``trace``         — the writer's phase walls (s); the manifest's
@@ -199,11 +198,8 @@ class IceLite:
         """
         parent = self.current_snapshot_id()
         snap_id = 0 if parent is None else parent + 1
-        parent_tables = self.snapshot(parent)["tables"] if parent is not None else {}
-        manifest_tables: dict[str, str | list] = {}
-        for t in carry_tables or []:
-            if t in parent_tables:
-                manifest_tables[t] = parent_tables[t]
+        parent_snap = self.snapshot(parent) if parent is not None else {}
+        parent_tables = parent_snap.get("tables", {})
 
         # The table writes are independent Spark jobs; submit them all at
         # once from a thread pool so the scheduler overlaps them: the writes
@@ -219,6 +215,7 @@ class IceLite:
             futs = {name: pool.submit(self.write_table, name, df, snap_id) for name, df in jobs.items()}
         written = {name: fut.result() for name, fut in futs.items()}
         write_s = round(time.perf_counter() - t0, 2)
+        manifest_tables = dict(parent_tables)
         for name, path in written.items():
             if name in appends:
                 prev = parent_tables.get(name, [])
@@ -226,41 +223,31 @@ class IceLite:
                 manifest_tables[name] = prev + [path]
             else:
                 manifest_tables[name] = path
-        # File-level column stats (Iceberg manifest semantics): per new
-        # file, row count + min/max of the table's declared stats column,
-        # from parquet FOOTERS only. Parent entries are carried forward for
-        # files still live in this snapshot (append tables keep history;
-        # replaced tables drop dead files), so one manifest read answers
-        # pruning for the whole file list.
-        parent_stats = self.snapshot(parent).get("stats", {}) if parent is not None else {}
+        schemas = {
+            **parent_snap.get("schemas", {}),
+            **{name: df.schema.json() for name, df in jobs.items()},
+        }
+        # File stats (Iceberg manifest semantics): the parent's entries for
+        # files still live in this snapshot (append tables keep history,
+        # replaced tables drop dead files) plus footer stats of every new
+        # file, so one manifest read answers pruning and row counts for the
+        # whole file list.
+        parent_stats = parent_snap.get("stats", {})
         stats: dict[str, dict] = {}
-        # Carry parent file stats forward for EVERY table whose files are
-        # still live — not only the tables this instance declares
-        # stats_columns for (ADVICE r5: a commit by a writer constructed
-        # without stats_columns, e.g. ensure_table/stream_to_icelite on the
-        # same store, used to write stats={} and silently disable round
-        # pruning from that snapshot on). New files only get stats when the
-        # writing instance declares the column.
-        for name, pstats in parent_stats.items():
-            live = manifest_tables.get(name)
-            if live is None:
-                continue
+        for name, live in manifest_tables.items():
             live_dirs = set(live if isinstance(live, list) else [live])
-            carried = {f: s for f, s in pstats.items() if os.path.dirname(f) in live_dirs}
-            if carried:
-                stats[name] = carried
-        for name, col in self.stats_columns.items():
-            if manifest_tables.get(name) is None:
-                continue
-            carried = stats.setdefault(name, {})
+            stats[name] = {
+                f: st for f, st in parent_stats.get(name, {}).items() if os.path.dirname(f) in live_dirs
+            }
             if name in written:
-                carried.update(_collect_file_stats(written[name], col))
+                stats[name].update(_file_stats(written[name]))
         manifest = {
             "id": snap_id,
             "parent": parent,
             "committed_at": time.time(),
             "note": note,
             "tables": manifest_tables,
+            "schemas": schemas,
             "stats": stats,
             "counters": counters or {},
             "trace": {**(trace or {}), "write_s": write_s},
@@ -280,14 +267,17 @@ class IceLite:
 def ensure_table(store: "IceLite", spark: SparkSession, name: str, ddl: str) -> None:
     """CREATE TABLE IF NOT EXISTS analog of the reference's ensure_index
     (es_sink.py:220-229, index.py:54-80): commit an empty typed table into
-    the current snapshot lineage if absent."""
+    the current snapshot lineage if absent, keeping the parent's counters."""
     sid = store.current_snapshot_id()
     if sid is not None and name in store.snapshot(sid)["tables"]:
         return
-    carry = list(store.snapshot(sid)["tables"].keys()) if sid is not None else []
+    # an always-false filter (Catalyst folds it to an empty relation), not
+    # spark.createDataFrame([], ddl): see urlseen.extend_shards
+    empty = spark.range(1).where(F.lit(False)).select(
+        *[F.lit(None).cast(f.dataType).alias(f.name) for f in T.StructType.fromDDL(ddl)]
+    )
     store.commit(
-        tables={name: spark.createDataFrame([], ddl)},
-        carry_tables=carry,
+        tables={name: empty},
         counters=dict(store.snapshot(sid)["counters"]) if sid is not None else {},
         note=f"ensure-{name}",
     )

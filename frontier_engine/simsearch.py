@@ -3,9 +3,7 @@
 All math is JVM-side (``zip_with``/``aggregate`` — whole-stage-codegen'd,
 no Python in the hot path). Brute-force cosine is the baseline; the scale
 path is an IVF probe over a Lloyd's k-means coarse quantizer
-(``kmeans_lloyd`` + ``ivf_probe_cluster``). ``lsh_sign_buckets_df`` is a
-random-hyperplane sign-bit sketch from fixed deterministic pseudo-planes
-(md5-seeded).
+(``kmeans_lloyd`` + ``ivf_probe_cluster``).
 
 At 100 TB the broadcast side is the query set (queries ≪ corpus): cosine
 against each query is a broadcast nested loop over corpus partitions, which
@@ -46,27 +44,6 @@ def cosine_to_query(
     return joined.select(
         *cols, F.round(cosine_col(F.col("embedding"), F.col("qv")), digits).alias("cos")
     )
-
-
-def lsh_sign_buckets_df(emb: DataFrame, n_bits: int = 8, dim: int = 64) -> DataFrame:
-    """Random-hyperplane sign-LSH sketch, (vec_id, bucket). Planes are not
-    stored: plane p's component j = ±1 by parity of md5(p:j) — deterministic,
-    engine-portable, and a pure literal-array column expression (JVM-side)."""
-    import hashlib
-
-    def sign(p: int, j: int) -> float:
-        return 1.0 if hashlib.md5(f"{p}:{j}".encode()).digest()[0] % 2 else -1.0
-
-    bucket = F.lit(0)
-    for p in range(n_bits):
-        signs = F.array(*[F.lit(sign(p, j)) for j in range(dim)])
-        proj = F.aggregate(
-            F.zip_with(F.col("embedding"), signs, lambda x, s: x.cast("double") * s),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        bucket = bucket + F.when(proj >= 0, F.lit(1 << p)).otherwise(F.lit(0))
-    return emb.select("vec_id", bucket.alias("bucket"))
 
 
 def _pos_explode(emb: DataFrame, id_col: str = "vec_id") -> DataFrame:

@@ -63,19 +63,22 @@ def stream_to_icelite(
     trigger_seconds: int | None = None,
 ) -> StreamingQuery:
     """foreachBatch sink: each micro-batch commits one IceLite append
-    snapshot (atomic; batch id recorded for exactly-once replay safety)."""
+    snapshot (atomic; batch id recorded for exactly-once replay safety).
+    The commit keeps the store's other tables and its counters, so the sink
+    can share a store with the frontier."""
     from frontier_engine.icelite import IceLite
 
     store = IceLite(store_root)
 
     def commit_batch(batch_df: DataFrame, batch_id: int) -> None:
         last = store.current_snapshot_id()
-        if last is not None and store.snapshot(last)["counters"].get("batch_id") == batch_id:
+        prev = store.snapshot(last)["counters"] if last is not None else {}
+        if prev.get("batch_id") == batch_id:
             return  # replayed batch after restart — already committed
         store.commit(
             tables={},
             append_tables={table: batch_df},
-            counters={"batch_id": batch_id, "rows": batch_df.count()},
+            counters={**prev, "batch_id": batch_id, "rows": batch_df.count()},
             note=f"stream-batch-{batch_id}",
         )
 

@@ -3,12 +3,16 @@ kill/resume determinism gate (SURVEY.md §5.4, north_rule)."""
 
 from __future__ import annotations
 
+import os
+
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
 from frontier_engine import frontier, pipeline, synth
 from frontier_engine.frontier import FrontierEngine
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 @pytest.fixture(scope="module")
@@ -192,16 +196,16 @@ class TestFrontierRounds:
         assert none.count() == 0 and none.columns == full.columns
 
     def test_stats_survive_statless_writer_commit(self, spark, run3):
-        """A commit by an IceLite instance constructed WITHOUT stats_columns
-        (ensure_table / streaming sink on the same store) must carry the
-        parent's file stats forward for live files instead of writing
-        stats={} and silently disabling round pruning (ADVICE r5)."""
+        """A commit by a second IceLite instance on the same store
+        (ensure_table / streaming sink) carries the parent's file stats
+        forward for live files instead of writing stats={} and silently
+        disabling round pruning (ADVICE r5)."""
         from frontier_engine.icelite import IceLite, ensure_table
 
         eng, counters = run3
         before = eng.store.snapshot(eng.store.current_snapshot_id())["stats"]
         assert before.get("frontier_log")
-        statless = IceLite(eng.store.root)  # no stats_columns declared
+        statless = IceLite(eng.store.root)  # a second writer on the store
         ensure_table(statless, spark, "side_table", "k long")
         after = statless.snapshot(statless.current_snapshot_id())["stats"]
         assert after.get("frontier_log") == before["frontier_log"]
@@ -222,6 +226,63 @@ class TestFrontierRounds:
             assert set(s["trace"]) == {"schedule_fetch_extract", "counters_lineage_job", "write_s"}
         assert all("write_s" in s["trace"] for s in snaps)
         assert all(v >= 0 for s in snaps for v in s["trace"].values())
+
+    def test_every_table_has_schema_and_stats(self, run3):
+        """Every snapshot records a schema and per-file stats for every
+        table it lists, the carried ``robots`` included, and a carried
+        table keeps its parent's entries."""
+        eng, _ = run3
+        snaps = eng.store.snapshots()
+        for s in snaps:
+            assert set(s["schemas"]) == set(s["tables"]) == set(s["stats"]), s["id"]
+            for t, dirs in s["tables"].items():
+                dirs = dirs if isinstance(dirs, list) else [dirs]
+                assert {os.path.dirname(f) for f in s["stats"][t]} == set(dirs), (s["id"], t)
+        rounds = [s for s in snaps if s["note"].startswith("round-")]
+        for s in rounds:
+            for key in ("tables", "schemas", "stats"):
+                assert s[key]["robots"] == snaps[0][key]["robots"], (s["id"], key)
+        # round-keyed tables carry per-file bounds of their round column
+        last = snaps[-1]["stats"]
+        assert all("round" in st["bounds"] for t in ("frontier_log", "schedule") for st in last[t].values())
+
+    def test_round_start_reads_launch_no_job(self, spark, run3):
+        """The manifest's schema spares each read its schema-inference job:
+        reading the four tables a round opens with launches no Spark job."""
+        eng, _ = run3
+        tracker = spark.sparkContext.statusTracker()
+        before = set(tracker.getJobIdsForGroup(None))
+        for t in ("frontier_pending", "frontier_known", "known_shards", "robots"):
+            assert eng.store.read(spark, t) is not None
+        assert set(tracker.getJobIdsForGroup(None)) == before
+
+    def test_show_store_prints_round_rows(self, run3):
+        """``tools/show_store.py`` prints each snapshot's note, counters,
+        trace and files/rows per table from the manifest; the frontier_log
+        rows each round wrote equal its settled counters."""
+        import json
+        import subprocess
+        import sys
+
+        eng, counters = run3
+        out = subprocess.run(
+            [sys.executable, os.path.join(ROOT, "tools", "show_store.py"), eng.store.root],
+            capture_output=True, text=True, timeout=60, check=True,
+        ).stdout
+        blocks: dict[int, dict] = {}
+        for ln in out.splitlines():
+            if ln.startswith("snapshot "):
+                cur = blocks.setdefault(int(ln.split()[1]), {})
+            else:
+                key, val = ln.split(":", 1)
+                cur[key.strip()] = val
+        for c in counters:
+            b = blocks[c["round"] + 1]  # snapshot 0 = init
+            assert b["note"].strip() == f"round-{c['round']}"
+            assert json.loads(b["counters"]) == c
+            assert set(json.loads(b["trace"])) == {"schedule_fetch_extract", "counters_lineage_job", "write_s"}
+            files, rows, new_rows = (int(x) for x in b["frontier_log"].split()[::2])
+            assert (files, new_rows) == (c["round"] + 1, c["fetched"] + c["missing"] + c["skipped_robots"])
 
     def test_bloom_bits_not_multiple_of_8_rejected(self, spark, tmp_path):
         root = tmp_path / "bad_bits"
@@ -302,14 +363,19 @@ class TestFrontierRounds:
     def test_store_without_known_stats_takes_bloom_path(self, spark, tmp_path, run3, crawl_inputs,
                                                         round_paths):
         """A store whose frontier_known files carry no row stats (written
-        before the table declared them) cannot size the gate, so link
-        discovery takes the exact bloom path, with the same results."""
+        before every table had them; here the init manifest's entry is
+        stripped) cannot size the gate, so link discovery takes the exact
+        bloom path, with the same results."""
+        import json
+
         _, seeds, robots, pages_prepared = crawl_inputs
         eng = _mk_engine(spark, tmp_path, "statless_known")
-        declared = eng.store.stats_columns
-        eng.store.stats_columns = {t: c for t, c in declared.items() if t != "frontier_known"}
-        eng.init(seeds, robots)
-        eng.store.stats_columns = declared
+        path = eng.store._meta_path(eng.init(seeds, robots))
+        with open(path) as f:
+            snap = json.load(f)
+        del snap["stats"]["frontier_known"]
+        with open(path, "w") as f:
+            json.dump(snap, f)
         with pytest.MonkeyPatch.context() as mp:
             calls, _ = round_paths(mp)
             counters = [eng.run_round(pages_prepared) for _ in range(2)]
@@ -433,6 +499,53 @@ class TestFrontierRounds:
         cand = frontier.candidates_from_urls(links, 1, "synth", resolve_base_col="base_url")
         assert cand._jdf.queryExecution().executedPlan().toString().count("ArrowEvalPython") == 1
 
+    def test_unparseable_seed_dropped_at_admission(self, spark, tmp_path, pages_pdf):
+        """``urlsplit`` rejects ``http://[::1/x`` ("Invalid IPv6 URL"), and so
+        would the extraction kernel. A seed (and page) with that url is
+        dropped at admission, so the round commits and the frontier holds
+        no row for it."""
+        bad, ok = "http://[::1/x", "http://a.com/"
+        html = pages_pdf["html"].iloc[0]
+        pages = spark.createDataFrame(pd.DataFrame(
+            {"url": [bad, ok], "warc_ts": [pd.Timestamp("2021-03-01")] * 2, "html": [html, html]}
+        ))
+        seeds = spark.createDataFrame(pd.DataFrame({"url": [bad, ok], "priority": [1.0, 1.0]}))
+        robots = spark.createDataFrame(pd.DataFrame({"host": ["a.com"], "robots_txt": [""]}))
+        eng = _mk_engine(spark, tmp_path, "bad_seed")
+        sid = eng.init(seeds, robots)
+        counters = eng.run_round(pipeline.dedup_newest(pipeline.canonicalized(pages)))
+        assert eng.store.current_snapshot_id() == sid + 1
+        assert counters["pending_in"] == 1 and counters["fetched"] == 1
+        urls = [r.url_norm for r in eng.frontier_table().collect()]
+        assert ok in urls and not any("[" in u for u in urls)
+
+    def test_stream_sink_keeps_frontier(self, spark, tmp_path, run3, crawl_inputs, pages_pdf):
+        """A ``stream_to_icelite`` batch committed into an initialized
+        frontier store keeps every frontier table and the counters, so the
+        next round matches a clean engine's first round."""
+        from frontier_engine import streaming
+
+        _, seeds, robots, pages_prepared = crawl_inputs
+        eng = _mk_engine(spark, tmp_path, "shared")
+        eng.init(seeds, robots)
+        init_tables = set(eng.store.snapshot(eng.store.current_snapshot_id())["tables"])
+        src = str(tmp_path / "ingest_src")
+        spark.createDataFrame(pages_pdf.head(20)[["url", "lang"]]).write.parquet(src)
+        q = streaming.stream_to_icelite(
+            spark.readStream.schema("url string, lang string").parquet(src),
+            eng.store.root, "ingest", str(tmp_path / "ingest_ck"),
+        )
+        q.processAllAvailable()
+        q.stop()
+        snap = eng.store.snapshot(eng.store.current_snapshot_id())
+        assert set(snap["tables"]) == init_tables | {"ingest"}
+        assert eng.store.read(spark, "ingest").count() == 20
+        counters = eng.run_round(pages_prepared)
+        assert set(eng.store.snapshot(eng.store.current_snapshot_id())["tables"]) >= init_tables | {"ingest"}
+        eng_clean, counters_clean = run3
+        assert counters == counters_clean[0]
+        assert _schedule_list(eng) == [s for s in _schedule_list(eng_clean) if s[0] == 0]
+
     def test_round_demo_releases_its_cache(self, spark):
         """The catalog's ``frontier_round_demo`` leaves no cached frame
         behind after an evaluation."""
@@ -508,11 +621,10 @@ class TestResumeDeterminism:
         import subprocess
         import sys
 
-        root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
         store = str(tmp_path / "chaos")
         code = f"""
 import json, os, signal, sys
-sys.path.insert(0, {root!r})
+sys.path.insert(0, {ROOT!r})
 real_rename = os.rename
 def hook(src, dst):
     # kill exactly when snapshot 2's commit point is about to land —

@@ -252,12 +252,68 @@ class TestIceLite:
         store.commit(tables={}, append_tables={"log": spark.range(4)})
         assert store.read(spark, "log").count() == 7
 
-    def test_carry_tables(self, spark, tmp_path):
+    def test_untouched_tables_carried(self, spark, tmp_path):
+        """A commit carries every parent table it neither replaces nor
+        appends: same files, schema and stats, no write."""
         store = IceLite(str(tmp_path / "t"))
         store.commit(tables={"static": spark.range(2), "v": spark.range(1)})
-        store.commit(tables={"v": spark.range(9)}, carry_tables=["static"])
+        store.commit(tables={"v": spark.range(9)})
+        s0, s1 = store.snapshot(0), store.snapshot(1)
+        for key in ("tables", "schemas", "stats"):
+            assert s1[key]["static"] == s0[key]["static"], key
+        assert s1["tables"]["v"] != s0["tables"]["v"]
         assert store.read(spark, "static").count() == 2
         assert store.read(spark, "v").count() == 9
+
+    def test_stats_schema_for_every_column_type(self, spark, tmp_path):
+        """Every written table gets a schema and per-file stats. Bounds are
+        kept only for plain integer columns: date, timestamp and decimal
+        footer values (INT32/INT64 or INT96 underneath) do not round-trip
+        through JSON, and must not fail the commit. A prune on the long
+        column opens only the files whose bounds intersect the range."""
+        store = IceLite(str(tmp_path / "t"))
+        df = spark.range(0, 40, 1, 4).selectExpr(
+            "id",
+            "date'2020-01-01' + cast(id AS int) AS d",
+            "timestamp'2020-01-01 00:00:00' + make_interval(0, 0, 0, 0, 0, 0, id) AS ts",
+            "to_timestamp_ntz('2020-01-01') AS ntz",
+            "cast(id AS decimal(10, 2)) AS dec",
+            "cast(id AS decimal(20, 2)) AS wide_dec",
+        )
+        store.commit(tables={"t": df})
+        snap = store.snapshot(0)
+        assert snap["schemas"]["t"] == df.schema.json()
+        stats = snap["stats"]["t"]
+        assert len(stats) == 4 and sum(s["rows"] for s in stats.values()) == 40
+        assert all(set(s["bounds"]) == {"id"} for s in stats.values())
+        assert sorted(store.read(spark, "t").collect()) == sorted(df.collect())
+        pruned = store.read(spark, "t", prune=("id", 12, 15))
+        assert len(pruned.inputFiles()) == 1
+        assert sorted(r.id for r in pruned.where("id BETWEEN 12 AND 15").collect()) == [12, 13, 14, 15]
+
+    def test_old_stats_format_reads_unpruned(self, spark, tmp_path):
+        """A manifest whose stats are in the older one-column
+        ``{col, rows, min, max}`` form reads safely: prune keeps every
+        file, and ``rows`` still sums."""
+        import json
+
+        from frontier_engine import frontier
+
+        store = IceLite(str(tmp_path / "t"))
+        store.commit(tables={}, append_tables={"frontier_known": spark.range(0, 9, 1, 3).toDF("url_hash")})
+        path = store._meta_path(0)
+        with open(path) as f:
+            snap = json.load(f)
+        snap["stats"]["frontier_known"] = {
+            fp: {"col": "url_hash", "rows": s["rows"], "min": s["bounds"]["url_hash"][0],
+                 "max": s["bounds"]["url_hash"][1]}
+            for fp, s in snap["stats"]["frontier_known"].items()
+        }
+        del snap["schemas"]
+        with open(path, "w") as f:
+            json.dump(snap, f)
+        assert len(store.read(spark, "frontier_known", prune=("url_hash", 0, 0)).inputFiles()) == 3
+        assert frontier._known_rows(store.snapshot(0)) == 9
 
     def test_crash_before_commit_point_invisible(self, spark, tmp_path):
         store = IceLite(str(tmp_path / "t"))

@@ -317,13 +317,6 @@ class TestSimsearch:
             want = float(v @ q / (np.linalg.norm(v) * np.linalg.norm(q)))
             assert abs(out[vid] - want) < 5e-4
 
-    def test_lsh_buckets_deterministic_and_complete(self, spark):
-        emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-        b1 = {r.vec_id: r.bucket for r in simsearch.lsh_sign_buckets_df(emb).collect()}
-        b2 = {r.vec_id: r.bucket for r in simsearch.lsh_sign_buckets_df(emb).collect()}
-        assert b1 == b2 and len(b1) == emb.count()
-        assert all(0 <= b < 256 for b in b1.values())
-
     def test_ivf_multiprobe_recovers_boundary_nn(self, spark):
         """nprobe>1 is what real IVF recall depends on (VERDICT r3 item 8):
         a query near the cluster boundary whose true NN (by cosine) is
